@@ -29,6 +29,19 @@ import graft.ops.Ops
   */
 object Bench {
 
+  /** The headline polygons — Paris, SanFrancisco and Holes, ids 1 to 3 —
+    * read from `src/test/resources/h3/shapes/` of the checkout (run from
+    * the repository root). A missing file fails fast with its path. */
+  def headlinePolys(): Seq[SpatialJoin.Poly] =
+    Seq("Paris", "SanFrancisco", "Holes").zipWithIndex.map { case (name, i) =>
+      val p = java.nio.file.Paths.get("src/test/resources/h3/shapes", s"$name.geojson")
+        .toAbsolutePath
+      if (!java.nio.file.Files.isRegularFile(p))
+        throw new java.io.FileNotFoundException(
+          s"bench shape $p not found; run from the repository root")
+      SpatialJoin.Poly(i + 1L, SpatialJoin.loadShape(p.toString)(0))
+    }
+
   /** Synthetic geotagged docs from the shared deterministic formulas.
     * 4 tasks per core so stragglers smooth out across the run. */
   def synthPoints(spark: SparkSession, n: Long): DataFrame =
@@ -214,13 +227,7 @@ object Bench {
     // shared machine shows ~15% run-to-run noise, so min-of-5 is the
     // stable estimator of engine speed.
     val headlineReps = math.max(reps, 5)
-    val polys = Seq(
-      SpatialJoin.Poly(1, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/Paris.geojson")(0)),
-      SpatialJoin.Poly(2, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/SanFrancisco.geojson")(0)),
-      SpatialJoin.Poly(3, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/Holes.geojson")(0)))
+    val polys = headlinePolys()
     var joinedDocs = 0L
     val tJoin = measure("pip_join_tiles", headlineReps) {
       val pts = synthPoints(spark, nDocs)
@@ -485,8 +492,7 @@ object Bench {
       graft.engine.Icelite.writeResumable(spark, icePts, r, "cell_p")
     }
     val iceRoot = iceRoots.head
-    val parisP = graft.h3.H3.latLngToCell(
-      Math.toRadians(48.8566), Math.toRadians(2.3522), 1)
+    val parisP = graft.h3.H3.latLngToCell(48.8566, 2.3522, 1)
     val parisCover = graft.h3.H3.gridDisk(parisP, 1).map(_.toString).toSet
     measure("icelite_scan_full", reps) {
       graft.engine.Icelite.read(spark, iceRoot)

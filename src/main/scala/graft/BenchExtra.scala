@@ -130,25 +130,27 @@ object BenchExtra {
     // dirs vs the default res 1: 842) trade per-file write/stats
     // overhead against directory-level prune granularity; the localized
     // query batch measures whether row-group pruning compensates.
-    def knnLocalProbe(name: String, bRes: Int): Unit = {
-      var c: Knn.PreparedCorpus = null
-      measure(s"knn_prepare_b$bRes") {
-        c = Knn.prepareCorpus(spark, knnPts, res = 8, maxRounds = 3,
-          bucketRes = bRes)
-      }
-      measure(s"knn_local_b$bRes") {
-        val qs = spark.range(0, 200, 1, 4).selectExpr(
-          "id AS qid",
-          "48.8566 + cast(id % 97 as double) * 2e-3 AS lat",
-          "2.3522 + cast(id % 89 as double) * 2e-3 AS lng")
-        val r = Knn.knnJoinPrepared(spark, c, qs, k = 10)
-        r.agg(count(lit(1))).collect()
-        r.unpersist(blocking = false)
-      }
-      if (c != null) c.release()
+    def knnLocalProbe(bRes: Int): Unit = {
+      // `measure` runs each body `reps` times: every rep's corpus is kept
+      // and released, the last one serving the query probe.
+      val corpora = scala.collection.mutable.ArrayBuffer.empty[Knn.PreparedCorpus]
+      try {
+        measure(s"knn_prepare_b$bRes") {
+          corpora += Knn.prepareCorpus(spark, knnPts, res = 8, maxRounds = 3,
+            bucketRes = bRes)
+        }
+        measure(s"knn_local_b$bRes") {
+          val qs = spark.range(0, 200, 1, 4).selectExpr(
+            "id AS qid",
+            "48.8566 + cast(id % 97 as double) * 2e-3 AS lat",
+            "2.3522 + cast(id % 89 as double) * 2e-3 AS lng")
+          Knn.knnJoinPrepared(spark, corpora.last, qs, k = 10)
+            .agg(count(lit(1))).collect()
+        }
+      } finally corpora.foreach(_.release())
     }
-    knnLocalProbe("b0", 0)
-    knnLocalProbe("b1", 1)
+    knnLocalProbe(0)
+    knnLocalProbe(1)
 
     // --- icelite_write staging vs stats (same frame as the bench phase) ---
     val icePts = Bench.synthPoints(spark, nDocs / 20).selectExpr(

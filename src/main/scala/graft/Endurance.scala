@@ -50,13 +50,7 @@ object Endurance {
 
     // Phase 1 — headline pipeline at the full sf1 volume (index at res 9,
     // PIP join against the polygon covers, res-5 tile aggregation).
-    val polys = Seq(
-      SpatialJoin.Poly(1, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/Paris.geojson")(0)),
-      SpatialJoin.Poly(2, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/SanFrancisco.geojson")(0)),
-      SpatialJoin.Poly(3, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/Holes.geojson")(0)))
+    val polys = Bench.headlinePolys()
     var joined = 0L
     val (_, tHeadline) = time {
       val pts = Bench.synthPoints(spark, nDocs)

@@ -38,13 +38,7 @@ object Scaling {
     Bench.synthPoints(spark, 100000)
       .selectExpr("h3_latlng_to_cell(lat, lng, 9) AS c").count()
 
-    val polys = Seq(
-      SpatialJoin.Poly(1, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/Paris.geojson")(0)),
-      SpatialJoin.Poly(2, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/SanFrancisco.geojson")(0)),
-      SpatialJoin.Poly(3, SpatialJoin.loadShape(
-        "/root/reference/dataset/shapes/Holes.geojson")(0)))
+    val polys = Bench.headlinePolys()
 
     val mode = sys.env.getOrElse("SPARK_GRAFT_SCALING_MODE", "join")
 

@@ -29,10 +29,12 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Some operators (knnJoin) return an eagerly-cached frame whose
-      // cache the caller owns; queries cannot unpersist after returning,
-      // so the harness drops all caches between queries — no cross-query
-      // leak, no cross-query warm-cache contamination.
+      // Some operators return an eagerly-cached frame whose cache the
+      // caller owns (knnJoin only for batches too large to settle on the
+      // driver; the contract's batches come back as local relations);
+      // queries cannot unpersist after returning, so the harness drops all
+      // caches between queries — no cross-query leak, no cross-query
+      // warm-cache contamination.
       spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -745,15 +746,18 @@ object Icelite {
     * in both the data rows and the delete rows. Entries without delete
     * files cost nothing extra (the common case compiles to the plain
     * scan). `dataPathsOf` lets incremental reads restrict WHICH data
-    * files deliver rows while the full delete set still applies. */
+    * files deliver rows while the full delete set still applies. A known
+    * data `schema` skips Spark's parquet footer-inference job. */
   private def readEntriesDf(spark: SparkSession, root: String,
                             partitionCol: String,
                             entries: Seq[PartitionEntry],
-                            dataPathsOf: PartitionEntry => Seq[String])
+                            dataPathsOf: PartitionEntry => Seq[String],
+                            schema: Option[StructType] = None)
       : Option[DataFrame] = {
     val dataPaths = entries.flatMap(dataPathsOf)
     if (dataPaths.isEmpty) return None
-    var df = spark.read.parquet(dataPaths: _*)
+    val reader = schema.fold(spark.read)(spark.read.schema)
+    var df = reader.parquet(dataPaths: _*)
     val withDel = entries.filter(_.deleteFiles.nonEmpty)
     for ((key, es) <- withDel.groupBy(_.deleteKey).toSeq.sortBy(_._1.mkString(","))) {
       val delPaths = es.flatMap(e =>
@@ -820,14 +824,17 @@ object Icelite {
   /** [[readWhere]] for automated scan planning (e.g. the kNN prepared
     * corpus): `Some(frame)` over exactly the matching buckets' files, or
     * `None` when no bucket matches — a normal outcome for a pruned scan,
-    * not a user error. */
+    * not a user error. A caller that already holds the table's data
+    * `schema` (from an earlier read) passes it to skip schema inference;
+    * nothing is cached by path, so an append cannot leave a stale one. */
   def readWhereOpt(spark: SparkSession, root: String,
-                   predicate: String => Boolean): Option[DataFrame] = {
+                   predicate: String => Boolean,
+                   schema: Option[StructType] = None): Option[DataFrame] = {
     val snap = currentSnapshot(root).getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
     readEntriesDf(spark, root, snap.partitionCol,
       snap.entries.filter(e => predicate(e.value)),
-      e => entryPaths(root, snap.partitionCol, e))
+      e => entryPaths(root, snap.partitionCol, e), schema)
   }
 
   /** Column-statistics range pruning (the Iceberg min/max scan-planning

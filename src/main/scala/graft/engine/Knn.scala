@@ -1,15 +1,20 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import scala.jdk.CollectionConverters._
+
+import graft.h3.H3
 import graft.spark.H3Functions
 
 /** kNN join via H3 gridDisk expansion with resolution-coarsening
   * escalation.
   *
   * Round 0 buckets both sides at `res` and joins each query's k-ring disk
-  * against the points (query disks are broadcast — points never shuffle).
+  * against the points (query disks are broadcast — points never shuffle —
+  * while they fit the cap).
   * A query's result is provably complete when it has K candidates and its
   * K-th distance is below the minimum possible distance to anything
   * outside the explored disk. Unsettled queries escalate to a coarser
@@ -17,6 +22,18 @@ import graft.spark.H3Functions
   * distances, so even isolated mid-ocean queries resolve without a
   * cross join; a brute-force pass remains as a final guard for corpora
   * with fewer than K points in half the globe.
+  *
+  * Rounds are planned on the driver whenever the remaining queries' disks
+  * fit `broadcastMaxDisks` and their top-k rows fit `DriverMaxRows`
+  * (10^5; every service-sized batch does): the driver holds
+  * the remaining queries — what the disk broadcast ships anyway — runs
+  * each round as one collecting action of at most k rows per query, and
+  * settles it in driver code. Only a remainder over either bound runs
+  * distributed rounds (counts, per-round caches, a shuffle disk join),
+  * handing over to the driver once it fits. The returned
+  * frame is materialized: a local relation with no cache to release,
+  * unless distributed rounds ran, whose share is cached (release it with
+  * `unpersist()`).
   *
   * Two call shapes:
   *  - [[knnJoin]] — one-shot: the corpus is scanned as needed and cached
@@ -56,9 +73,18 @@ object Knn {
     // settlement is rejected there — the ladder floors at res 1 and the
     // brute-force guard covers whatever cannot settle.
     require(res >= 1, s"safeRadiusM requires res >= 1, got $res")
-    val edgeM = graft.h3.Tables.EdgeLengthRads(res) * graft.h3.H3.EarthRadiusKm * 1000.0
+    val edgeM = graft.h3.Tables.EdgeLengthRads(res) * H3.EarthRadiusKm * 1000.0
     ring.toDouble * edgeM * 0.75
   }
+
+  /** The most result rows (queries x k) a call settles on the driver and
+    * returns as a local relation; larger batches keep their result cached
+    * on the executors. Every action on a local relation re-reads its rows
+    * from the driver. Measured on 4 cores with a 200k-point prepared
+    * corpus and k = 10: at 10^6 rows an action cost 2.2-3.3 s more than
+    * from the executor cache, at this bound 0.15-0.25 s more, under the
+    * ~0.7 s of Spark jobs the driver path saves a batch. */
+  private val DriverMaxRows = 100000L
 
   /** Escalation ladder: native res, res-4, res 1 (near-hemispheric reach;
     * res 0 cannot soundly settle — see safeRadiusM). */
@@ -102,11 +128,13 @@ object Knn {
     * under `pruneMaxRowFraction` of the table; above it the full scan
     * (cache-backed) is the cheaper plan and is kept. At 10^12 points any
     * real batch touches a tiny row fraction, so the service shape reads
-    * a few buckets' files instead of a ~50 TB corpus scan per batch. */
+    * a few buckets' files instead of a ~50 TB corpus scan per batch.
+    * `schema` is the stored data schema, read once at prepare time, so a
+    * pruned read plans without inferring it from parquet footers. */
   final case class CorpusStore private[engine] (
       root: String, bucketRes: Int, ownsRoot: Boolean,
       rowsByBucket: Map[String, Long], filesByBucket: Map[String, Int],
-      totalRows: Long, pruneMaxRowFraction: Double)
+      totalRows: Long, pruneMaxRowFraction: Double, schema: StructType)
 
   /** A corpus indexed once for repeated [[knnJoinPrepared]] batches:
     * written to a bucketed Icelite table (the prune-able scan source)
@@ -122,10 +150,17 @@ object Knn {
     }
   }
 
-  /** Test/diagnostic probe: how the last prepared round-0 corpus scan was
+  /** How one round of a kNN call ran: `driver` for a round planned on the
+    * driver (one collecting action), false for a distributed round over
+    * the broadcast cap; `scan` is how a prepared store's corpus scan was
     * planned — ("pruned", nFiles) for a manifest-pruned file scan,
-    * ("full", -1) for the full-corpus scan. */
-  private[graft] var lastPreparedScan: Option[(String, Int)] = None
+    * ("full", -1) for the full-corpus scan, None without a store and for
+    * the brute-force guard. */
+  final case class RoundTrace(driver: Boolean, scan: Option[(String, Int)])
+
+  /** Test/diagnostic probe: the rounds of the last kNN call, in ladder
+    * order; an entry at index `levels.length` is the brute-force guard. */
+  private[graft] var lastRounds: Vector[RoundTrace] = Vector.empty
 
   /** Index `points` (columns: id, lat, lng) for repeated query batches:
     * computes the ladder cell columns and writes them to a bucketed
@@ -184,10 +219,11 @@ object Knn {
         val files = snap.entries.map(e => e.value -> e.files.length).toMap
         // Lazy cache: materialized only if a batch actually needs the
         // full scan (dispersed batch or escalation round).
-        val ptsC = withParents(Icelite.read(spark, tableRoot), levels).cache()
+        val stored = Icelite.read(spark, tableRoot)
+        val ptsC = withParents(stored, levels).cache()
         PreparedCorpus(ptsC, levels, res,
           Some(CorpusStore(tableRoot, bRes, owns, rows, files,
-            rows.valuesIterator.sum, pruneMaxRowFraction)))
+            rows.valuesIterator.sum, pruneMaxRowFraction, stored.schema)))
       case None =>
         // Empty corpus: nothing was staged, so no snapshot exists — fall
         // back to an (empty) in-memory frame with no store.
@@ -202,9 +238,14 @@ object Knn {
     * @param points  columns: id, lat, lng (degrees)
     * @param queries columns: qid, lat, lng (degrees)
     * @param broadcastMaxDisks max exploded disk rows (queries x disk size)
-    *        broadcast per round; above it the disk join falls back to a
-    *        shuffle join so huge query sets cannot blow the driver.
-    * @return columns: qid, id, dist_m, rank (rank 1..k)
+    *        broadcast per round, and the most rows (queries x max(disk
+    *        size, k)) a round holds on the driver; above it, or above
+    *        `DriverMaxRows` top-k rows, the round runs distributed, with a
+    *        shuffle disk join, so huge query sets cannot blow the driver.
+    * @return columns: qid, id, dist_m, rank (rank 1..k). A materialized
+    *         local relation when every round was planned on the driver
+    *         (nothing to release); a cached frame the caller may
+    *         `unpersist()` when the batch started over either bound.
     */
   def knnJoin(spark: SparkSession, points: DataFrame, queries: DataFrame,
               k: Int, res: Int, initialRing: Int = 2,
@@ -217,12 +258,14 @@ object Knn {
   }
 
   /** kNN join of one query batch against a [[prepareCorpus]] result.
-    * Round-0 scan planning is stats-driven: the batch's disk buckets are
-    * derived from the (tiny, cached) query frame, their row mass summed
-    * from the manifest, and the scan reads only those buckets' files
-    * when the mass is under the store's prune fraction — the full
-    * (cached) scan is kept only for batches genuinely touching most of
-    * the corpus. */
+    * Rounds planned on the driver (see the object doc) plan their scan
+    * from stats: the kernel derives the batch's disk
+    * buckets from the driver-held queries, the manifest sums their row
+    * mass, and the scan reads only those buckets' files when the mass is
+    * under the store's prune fraction — the full (cached) scan is kept
+    * only for batches genuinely touching most of the corpus, and for
+    * distributed rounds. Returns the same materialized frame as
+    * [[knnJoin]]; it does not depend on the corpus staying prepared. */
   def knnJoinPrepared(spark: SparkSession, corpus: PreparedCorpus,
                       queries: DataFrame, k: Int, initialRing: Int = 2,
                       broadcastMaxDisks: Long = 2L * 1000 * 1000): DataFrame =
@@ -238,23 +281,36 @@ object Knn {
     val rings = levels.zipWithIndex.map { case (_, i) =>
       if (i == 0) math.max(initialRing, 2) else 2
     }
+    val bruteRound = levels.length // the final brute-force guard
+    // The most remaining queries a round may hold on the driver: their
+    // exploded disks (what the broadcast ships anyway) and their top-k
+    // rows must both fit the cap, and their top-k rows DriverMaxRows too.
+    // Widths only shrink down the ladder, so a remainder that fits once
+    // fits every later round.
+    def driverMax(round: Int): Long = {
+      val width = if (round < bruteRound) H3.maxGridDiskSize(rings(round)) else 1L
+      math.min(broadcastMaxDisks / math.max(width, k.toLong), DriverMaxRows / math.max(k, 1))
+    }
     // When this call owns the corpus, it is NOT cached upfront: if round 0
     // settles every query (the common case), caching would materialize the
     // full projected corpus for nothing. The cache is installed lazily the
     // first time a round leaves unsettled queries, so escalation rounds
-    // still reuse one materialization.
+    // still reuse one materialization (a prepared corpus is already hot).
     var ptsC = corpus
     var ptsCached = false
+    def escalate(): Unit =
+      if (corpusOwned && !ptsCached) { ptsC = ptsC.cache(); ptsCached = true }
+    var rounds = Vector.empty[RoundTrace]
+    val fullScan = store.map(_ => ("full", -1))
 
-    // Every cache taken below is recorded and released before returning —
-    // long escalation ladders must not leak cached partitions for the
-    // session lifetime (the result is materialized first, see the tail).
-    val cachedFrames = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var remaining = queries
+    val queryFrame = queries
       .withColumn("__qcell", expr(s"h3_latlng_to_cell(lat, lng, ${levels.head})"))
       .select(col("qid"), col("lat").as("qlat"), col("lng").as("qlng"), col("__qcell"))
-      .cache()
-    cachedFrames += remaining
+
+    def disks(qs: DataFrame, round: Int): DataFrame =
+      qs.select(col("qid"), col("qlat"), col("qlng"),
+        expr(s"h3_grid_disk(h3_cell_to_parent(__qcell, ${levels(round)}), ${rings(round)})")
+          .as("__cell"))
 
     // Per-query top-k via the typed aggregator: partial top-k runs
     // map-side, so each round's shuffle carries at most k rows per query
@@ -269,135 +325,152 @@ object Knn {
         .select(col("qid"), col("id"), (-col("negd")).as("dist_m"), col("rank"))
     }
 
-    var result: DataFrame = null
-    var done = false
-    var round = 0
-    val totalRounds = levels.length + 1 // + brute guard
-    var remainingCount = queries.count()
-
-    while (!done) {
-      val bruteRound = round == totalRounds - 1
-      val cand =
-        if (bruteRound) remaining.crossJoin(ptsC)
-        else {
-          val level = levels(round)
-          val ring = rings(round)
-          val disks = remaining
-            .select(col("qid"), col("qlat"), col("qlng"),
-              expr(s"h3_grid_disk(h3_cell_to_parent(__qcell, $level), $ring)")
-                .as("__cell"))
-          // Broadcast only while the exploded disk set is provably small;
-          // otherwise shuffle both sides on the disk cell (query sets in
-          // the millions would blow the driver through the broadcast).
-          val diskRows = remainingCount * graft.h3.H3.maxGridDiskSize(ring)
-          // Stats-driven scan planning over a bucketed store: derive the
-          // batch's bucket set from the (cached, tiny) remaining-query
-          // frame, sum its row mass from the manifest, and scan only the
-          // matching buckets' files when the mass is a small fraction of
-          // the corpus (at 10^12 points every real batch is). Disks at
-          // `level` truncate exactly to the store's bucket (pure bit
-          // parentage — no geometric protrusion), so the prune loses no
-          // candidate. A batch touching most of the corpus (or an
-          // escalation below bucketRes) keeps the full cached scan.
-          val roundCorpus = store match {
-            case Some(st) if level >= st.bucketRes &&
-                diskRows <= broadcastMaxDisks =>
-              // One tiny job over the (cached) remaining queries yields
-              // the bucket set AND the disk-cell range of the batch.
-              val bRows = remaining
-                .select(expr(
-                  s"h3_grid_disk(h3_cell_to_parent(__qcell, $level), $ring)")
-                  .as("__c"))
-                .selectExpr(
-                  s"cast(h3_cell_to_parent(__c, ${st.bucketRes}) as string) AS b",
-                  "min(__c) OVER () AS lo", "max(__c) OVER () AS hi")
-                .distinct().collect()
-              val bSet = bRows.map(_.getString(0)).toSet
-              val mass = bSet.iterator.map(st.rowsByBucket.getOrElse(_, 0L)).sum
-              if (mass <= st.pruneMaxRowFraction * st.totalRows && bRows.nonEmpty) {
-                // Two-level scan pruning: manifest file pruning to the
-                // disk buckets, then the batch's [min,max] disk-cell
-                // range pushed into the parquet scan — rows are sorted
-                // by the finest cell in 8 MB row groups, so a localized
-                // batch skips most of a kept bucket's bytes too. Cells
-                // share one resolution, so raw-long order is total and
-                // the BETWEEN is a semantic no-op over the equi-join.
-                val (lo, hi) = (bRows.head.getLong(1), bRows.head.getLong(2))
-                // Stored schema carries only the finest cell; re-derive
-                // the ladder parents (bit ops) AFTER the range filter so
-                // the finest-cell BETWEEN still pushes into the parquet
-                // scan. For level == levels.head the filter column IS the
-                // stored one (the common round-0 case); for escalation
-                // levels the equivalent stored-column range is the same
-                // [lo, hi] mapped through bit parentage — conservatively
-                // filter on the derived column post-read there.
-                val raw = Icelite.readWhereOpt(spark, st.root, bSet.contains)
-                val pruned = raw
-                  .map { df =>
-                    val dressed = withParents(df, levels)
-                    dressed.filter(col(s"__pcell$level").between(lo, hi))
-                  }
-                  .getOrElse(ptsC.limit(0))
-                lastPreparedScan = Some(("pruned",
-                  bSet.iterator.map(st.filesByBucket.getOrElse(_, 0)).sum))
-                pruned
-              } else {
-                lastPreparedScan = Some(("full", -1))
-                ptsC
-              }
-            case _ =>
-              if (store.isDefined) lastPreparedScan = Some(("full", -1))
-              ptsC
+    // Round scan over a bucketed store, planned from the driver-held
+    // batch: the kernel derives the batch's bucket set and [lo, hi]
+    // disk-cell range (the same cells the disk generator emits), the
+    // manifest sums the buckets' row mass, and the scan reads only those
+    // buckets' files when the mass is a small fraction of the corpus (at
+    // 10^12 points every real batch is). Disks at `level` truncate exactly
+    // to the store's bucket (pure bit parentage — no geometric
+    // protrusion), so the prune loses no candidate. The range is pushed
+    // into the parquet scan: rows are sorted by the finest cell in 8 MB
+    // row groups, so a localized batch skips most of a kept bucket's
+    // bytes too; cells share one resolution, so raw-long order is total
+    // and the BETWEEN is a semantic no-op over the equi-join. A batch
+    // touching most of the corpus (or an escalation below bucketRes)
+    // keeps the full cached scan.
+    def roundScan(round: Int, qs: Array[Row]): (DataFrame, Option[(String, Int)]) = {
+      val level = levels(round)
+      store match {
+        case Some(st) if level >= st.bucketRes =>
+          val buckets = scala.collection.mutable.HashSet.empty[String]
+          var lo = Long.MaxValue
+          var hi = Long.MinValue
+          for (q <- qs if !q.isNullAt(3)) {
+            val p = H3.cellToParent(q.getLong(3), level)
+            if (p != 0L) for (c <- H3.gridDisk(p, rings(round))) {
+              buckets += H3.cellToParent(c, st.bucketRes).toString
+              lo = math.min(lo, c)
+              hi = math.max(hi, c)
+            }
           }
-          if (diskRows <= broadcastMaxDisks)
-            roundCorpus.join(broadcast(disks), col("__cell") === col(s"__pcell$level"))
-          else
-            roundCorpus.join(disks, col("__cell") === col(s"__pcell$level"))
+          val mass = buckets.iterator.map(st.rowsByBucket.getOrElse(_, 0L)).sum
+          if (buckets.nonEmpty && mass <= st.pruneMaxRowFraction * st.totalRows) {
+            // Stored schema carries only the finest cell; the ladder
+            // parents are re-derived AFTER reading so that for round 0
+            // (level == levels.head) the BETWEEN filters the stored column
+            // and pushes into the parquet scan; escalation levels filter
+            // the derived column post-read.
+            val scan = Icelite.readWhereOpt(spark, st.root, buckets.contains, Some(st.schema))
+              .map(df => withParents(df, levels).filter(col(s"__pcell$level").between(lo, hi)))
+              .getOrElse(ptsC.limit(0))
+            (scan, Some(("pruned", buckets.iterator.map(st.filesByBucket.getOrElse(_, 0)).sum)))
+          } else (ptsC, fullScan)
+        case _ => (ptsC, fullScan)
+      }
+    }
+
+    // Driver-planned rounds: the remaining queries are local rows, so a
+    // round is ONE collecting action (scan ⋈ broadcast disks → top-k, at
+    // most k rows per query) and settlement is driver code — no counts,
+    // no per-round caches, no result cache.
+    def driverRounds(from: Int, start: Array[Row]): Seq[Row] = {
+      val settled = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var qs = start
+      var round = from
+      while (qs.nonEmpty && round <= bruteRound) {
+        val qFrame = spark.createDataFrame(java.util.Arrays.asList(qs: _*), queryFrame.schema)
+        if (round == bruteRound) {
+          rounds :+= RoundTrace(driver = true, None)
+          settled ++= rank(qFrame.crossJoin(ptsC)).collect()
+          qs = Array.empty
+        } else {
+          val level = levels(round)
+          val (scan, how) = roundScan(round, qs)
+          rounds :+= RoundTrace(driver = true, how)
+          val ranked = rank(scan
+            .join(broadcast(disks(qFrame, round)), col("__cell") === col(s"__pcell$level")))
+            .collect()
+          // A query settles with k candidates whose k-th distance is
+          // inside the explored disk's safe radius.
+          val safe = safeRadiusM(level, rings(round))
+          val ok = ranked.groupBy(_.get(0)).collect {
+            case (q, rs) if q != null && rs.length == k && rs.forall(_.getDouble(2) <= safe) => q
+          }.toSet
+          settled ++= ranked.filter(r => ok(r.get(0)))
+          qs = qs.filterNot(r => ok(r.get(0)))
+          if (qs.nonEmpty) escalate()
         }
+        round += 1
+      }
+      settled.toSeq
+    }
 
-      val ranked = rank(cand).cache()
-      cachedFrames += ranked
-
-      if (bruteRound) {
-        result = if (result == null) ranked else result.unionByName(ranked)
-        done = true
-      } else {
-        val safe = safeRadiusM(levels(round), rings(round))
-        // okQids is tiny (<= one row per remaining query); caching it and
-        // counting it replaces the old second materialization
-        // (remaining.count() after a left_anti join) — one small job per
-        // round instead of two.
-        val okQids = ranked.groupBy("qid")
-          .agg(count(lit(1)).as("n"), max("dist_m").as("kth"))
-          .filter(col("n") === k && col("kth") <= lit(safe))
-          .select("qid")
-          .cache()
-        cachedFrames += okQids
-        val nOk = okQids.count()
-        val settled = ranked.join(okQids, "qid")
-        result = if (result == null) settled else result.unionByName(settled)
-        if (nOk == remainingCount) done = true
-        else {
+    // Distributed rounds cache their ranked frames; every cache is released
+    // before returning.
+    val cachedFrames = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    var result: DataFrame = null
+    var local: Seq[Row] = Nil
+    // One bounded collect decides the path: a batch that fits the driver
+    // bounds is held on the driver from round 0 (a local query frame costs no job).
+    val fit0 = driverMax(0)
+    val probe = queryFrame.limit(math.min(fit0, Int.MaxValue - 1L).toInt + 1).collect()
+    if (probe.length <= fit0) local = driverRounds(0, probe)
+    else {
+      // Over the driver bounds: distributed rounds shuffle the full scan
+      // and the disks on the disk cell until the remainder fits the
+      // driver.
+      var remaining = queryFrame.cache()
+      cachedFrames += remaining
+      var remainingCount = remaining.count()
+      var round = 0
+      while (remainingCount > driverMax(round)) {
+        if (round == bruteRound) {
+          rounds :+= RoundTrace(driver = false, None)
+          val ranked = rank(remaining.crossJoin(ptsC)).cache()
+          cachedFrames += ranked
+          result = if (result == null) ranked else result.unionByName(ranked)
+          remainingCount = 0
+        } else {
+          rounds :+= RoundTrace(driver = false, fullScan)
+          val level = levels(round)
+          val ranked = rank(ptsC.join(disks(remaining, round),
+            col("__cell") === col(s"__pcell$level"))).cache()
+          cachedFrames += ranked
+          // okQids is tiny (<= one row per remaining query); caching and
+          // counting it settles the round in one small job.
+          val okQids = ranked.groupBy("qid")
+            .agg(count(lit(1)).as("n"), max("dist_m").as("kth"))
+            .filter(col("n") === k && col("kth") <= lit(safeRadiusM(level, rings(round))))
+            .select("qid")
+            .cache()
+          cachedFrames += okQids
+          val nOk = okQids.count()
+          val settled = ranked.join(okQids, "qid")
+          result = if (result == null) settled else result.unionByName(settled)
           remainingCount -= nOk
           remaining = remaining.join(okQids, Seq("qid"), "left_anti")
-          // Entering an escalation round: every later round rescans the
-          // full point set, so NOW the one-time cache pays for itself
-          // (only when this call owns the corpus — a prepared corpus is
-          // already hot).
-          if (corpusOwned && !ptsCached) { ptsC = ptsC.cache(); ptsCached = true }
+          if (remainingCount > 0) escalate()
         }
+        round += 1
       }
-      round += 1
+      if (remainingCount > 0) local = driverRounds(round, remaining.collect())
     }
-    // The per-round caches stay hot for the whole call (an eager per-round
-    // checkpoint instead costs ~3x wall on the common settle-in-round-0
-    // path — measured), but must not outlive it: the FINAL result — tiny,
-    // <= k rows per query — is cached and materialized from the hot
-    // caches, then every per-round cache is released (unpersisting a
-    // parent does not invalidate a child's own cache). The caller owns
-    // the returned frame's cache.
-    val out = result.cache()
-    out.count()
+    lastRounds = rounds
+
+    val settledLocal = spark.createDataFrame(local.asJava,
+      rank(queryFrame.crossJoin(ptsC)).schema)
+    // A distributed share is cached and materialized from the hot
+    // per-round caches before they are released (unpersisting a parent
+    // does not invalidate a child's own cache); the caller owns that
+    // cache. Otherwise the result is the local relation itself.
+    val out =
+      if (result == null) settledLocal
+      else {
+        val o = result.unionByName(settledLocal).cache()
+        o.count()
+        o
+      }
     cachedFrames.foreach(_.unpersist(blocking = false))
     if (ptsCached) ptsC.unpersist(blocking = false)
     out

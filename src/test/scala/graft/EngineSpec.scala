@@ -797,8 +797,8 @@ class CoarseCoverExactnessSpec extends org.scalatest.funsuite.AnyFunSuite {
     val spark = SparkTestBase.spark
     import spark.implicits._
     graft.spark.H3Functions.register(spark)
-    val holes = graft.h3.Geo.parseGeoJson(scala.io.Source.fromFile(
-      "/root/reference/dataset/shapes/Holes.geojson").mkString)
+    val holes = graft.h3.Geo.parseGeoJson(scala.io.Source.fromURL(
+      getClass.getResource("/h3/shapes/Holes.geojson")).mkString)
     val polys = Seq(graft.engine.SpatialJoin.Poly(3L, holes(0)))
     assert(graft.engine.SpatialJoin.coverResFor(holes(0), 9) < 9) // coarse cover engaged
     // Dense grid around the historical false-positive, plus the point itself.
