@@ -13,17 +13,27 @@ import graft.spark.H3Functions
 /** H3-bucketed point-in-polygon spatial join.
   *
   * Strategy: polygons are tiled into an annotated cover (fully-contained
-  * cells, compacted; boundary cells at the probe resolution). The probe side
-  * joins on its cell's ancestor at each cover resolution. Rows landing on a
-  * fully-contained cover cell are accepted without further work; rows on
-  * boundary cells pass through an exact ray-cast PIP filter.
+  * cells and boundary cells, at each polygon's adaptive cover resolution).
+  * A probe row matches a cover cell through its cell's bit-ancestor at
+  * each cover resolution. Rows landing on a fully-contained cover cell are
+  * accepted without further work; rows on boundary cells pass through an
+  * exact ray-cast PIP filter.
   *
-  * Scale notes: the cover is broadcast when small (the usual case — a
-  * compacted country cover at res 9 is ~10^4-10^5 rows); for continent-scale
-  * covers pass `broadcastCover = false` to shuffle both sides partitioned by
-  * the cover cell. AQE handles residual skew; deliberate hot-cell salting is
-  * applied on the probe side for the top-N hottest cells when
-  * `saltHotCells > 0`.
+  * Broadcast paths (the default for both call shapes): the polygon set is
+  * tiled ONCE into a prepared [[CoverIndex]] (sorted cover cells probed
+  * by binary search, flags, geometry) and broadcast once; later calls on
+  * the same content in the same SparkContext reuse it, with no tiling and
+  * no new broadcast. The probe, the explode of its matches and the exact
+  * filter all run in the probe side's own codegen stage.
+  *
+  * Shuffle paths, for covers too large to broadcast: `pipJoin(...,
+  * broadcastCover = false)` shuffles both sides on the cover cell, salting
+  * each probe row into one of `saltBuckets` buckets (the cover side is
+  * replicated per bucket) so a hot cell spreads over that many reducers;
+  * AQE's skew join handles residual imbalance.
+  * `pipJoinPolygonTable(..., broadcastPolygons = false)` — also taken for
+  * a table too large for the driver ([[CoverIndex.MaxDriverBytes]]) —
+  * tiles the table on executors.
   */
 object SpatialJoin {
 
@@ -57,35 +67,37 @@ object SpatialJoin {
   def cover(polys: Seq[Poly], res: Int,
             compactFull: Boolean = false): Seq[(Long, Long, Int, Boolean)] =
     polys.flatMap { p =>
-      val coverRes = coverResFor(p.geo, res)
       // Buffered + eroded cover so the cheap bit-parent probe key stays
       // exact under child protrusion (see Geo.bufferedAnnotatedCover).
-      val (cells, flags) =
-        if (coverRes == res)
-          Geo.polygonToCellsAnnotated(Array(p.geo), coverRes, Geo.IntersectsBoundary)
-        else Geo.bufferedAnnotatedCover(Array(p.geo), coverRes)
+      val (cells, flags) = Geo.adaptiveAnnotatedCover(Array(p.geo), res)
       if (compactFull) {
         val full = cells.indices.filter(flags).map(cells).toArray.sortBy(H3.orderKey)
         val partial = cells.indices.filterNot(flags).map(cells)
         H3.compactSorted(full).map(c => (p.id, c, H3.getResolution(c), true)) ++
-          partial.map(c => (p.id, c, coverRes, false))
+          partial.map(c => (p.id, c, H3.getResolution(c), false))
       } else {
-        cells.indices.map(i => (p.id, cells(i), coverRes, flags(i)))
+        cells.indices.map(i => (p.id, cells(i), H3.getResolution(cells(i)), flags(i)))
       }
     }
 
-  /** PIP join: returns `points` columns + `poly_id`.
+  /** PIP join: returns `points` columns + `poly_id`, one row per
+    * (point, containing polygon) pair.
     *
     * @param points    probe side; must contain `lat`, `lng` (degrees) and a
     *                  `cell` column at resolution `res`.
-    * @param polys     polygon set (broadcast with the plan).
+    * @param polys     polygon set.
     * @param res       probe/boundary cell resolution.
+    * @param broadcastCover true (default) probes the broadcast
+    *                  [[CoverIndex]] of `polys`; false shuffles both sides
+    *                  on the cover cell, salted into `saltBuckets`.
     */
   def pipJoin(spark: SparkSession, points: DataFrame, polys: Seq[Poly],
               res: Int, cellCol: String = "cell9",
               broadcastCover: Boolean = true,
               saltBuckets: Int = 8): DataFrame = {
     H3Functions.register(spark)
+    if (broadcastCover)
+      return CoverIndex.join(points, CoverIndex.forPolys(spark, polys, res), cellCol)
     import spark.implicits._
 
     val coverRows = cover(polys, res)
@@ -103,10 +115,10 @@ object SpatialJoin {
     // on the hot path), coarse covers are BUFFERED by one ring for
     // completeness and their full flags ERODED by one ring for sound
     // acceptance (Geo.bufferedAnnotatedCover) — the probe stays a 3-bit-op
-    // parent truncation.
+    // parent truncation. The broadcast CoverIndex probes the same keys.
     // Single cover resolution (the common case — all polygons fit the cap
     // at one ladder res): no Generate node, the probe key is one bit-op
-    // column and the join stage stays one straight codegen pipeline.
+    // column.
     val probe =
       if (coverResolutions.size == 1) {
         points.withColumn("__anc",
@@ -118,25 +130,19 @@ object SpatialJoin {
         points.withColumn("__anc", explode(ancestors))
       }
 
-    val joined =
-      if (broadcastCover)
-        probe.join(broadcast(coverDf), probe("__anc") === coverDf("cover_cell"))
-      else {
-        // Shuffle path for covers too large to broadcast. Hot probe cells
-        // (city-cluster skew) are salted: the cover side is replicated per
-        // salt bucket, the probe side picks a deterministic per-row salt,
-        // so one hot cover cell spreads over `saltBuckets` reducers. AQE's
-        // skew-join is the backstop for residual imbalance.
-        val saltedCover = coverDf.withColumn("__salt",
-          explode(array((0 until saltBuckets).map(lit): _*)))
-        val saltedProbe = probe.withColumn("__salt",
-          pmod(xxhash64(col(cellCol), col("lat"), col("lng")),
-            lit(saltBuckets)).cast("int"))
-        saltedProbe.join(saltedCover,
-          saltedProbe("__anc") === saltedCover("cover_cell") &&
-            saltedProbe("__salt") === saltedCover("__salt"))
-          .drop("__salt")
-      }
+    // Hot probe cells (city-cluster skew) are salted: the cover side is
+    // replicated per salt bucket, the probe side picks a deterministic
+    // per-row salt, so one hot cover cell spreads over `saltBuckets`
+    // reducers. AQE's skew-join is the backstop for residual imbalance.
+    val saltedCover = coverDf.withColumn("__salt",
+      explode(array((0 until saltBuckets).map(lit): _*)))
+    val saltedProbe = probe.withColumn("__salt",
+      pmod(xxhash64(col(cellCol), col("lat"), col("lng")),
+        lit(saltBuckets)).cast("int"))
+    val joined = saltedProbe.join(saltedCover,
+      saltedProbe("__anc") === saltedCover("cover_cell") &&
+        saltedProbe("__salt") === saltedCover("__salt"))
+      .drop("__salt")
 
     val polyMap = polys.map(p => p.id -> p.geo).toMap
     val pip = org.apache.spark.sql.GraftBridge.column(PointInPolygonSet(
@@ -156,105 +162,128 @@ object SpatialJoin {
 
   /** PIP join against a polygon TABLE — the shape for thousands/millions
     * of geofences, where a driver-side Seq[Poly] cannot hold them.
+    * Returns `poly_id` + `points` columns, one row per (point, containing
+    * polygon) pair.
     *
-    * Scale design: covers are computed ON EXECUTORS by the annotated
-    * generator (one row per cover cell, full/boundary flagged); the
-    * candidate join carries (poly_id, cell, full) ids only; rows on fully
-    * contained cells are accepted outright, and the geometry string joins
-    * back exactly once — only for boundary-cell rows — before the exact
-    * ray-cast filter (memoized parse per executor).
+    * Broadcast path: ONE scan collects (poly_id, geojson) while the
+    * polygons' estimated driver bytes (GeoJSON plus cover size hints,
+    * [[CoverIndex.driverBytes]]) stay within
+    * [[CoverIndex.MaxDriverBytes]]. Their [[CoverIndex]] is prepared from
+    * the rows (tiled on the driver's cores through the per-JVM cover memo,
+    * or reused as is when the content is unchanged) and probed in the
+    * points' own stage; an index over [[CoverIndex.MaxRegistryCells]] is
+    * rebuilt on every call. Past the budget, and for
+    * `broadcastPolygons = false`, the shuffle path: covers are computed ON
+    * EXECUTORS by the annotated generator; the candidate join carries
+    * (poly_id, cell, full) ids only; rows on fully contained cells are
+    * accepted outright, and the geometry string joins back exactly once —
+    * only for boundary-cell rows — before the exact ray-cast filter
+    * (memoized parse per executor).
     *
-    * @param polygons columns: poly_id (long), geojson (string)
-    * @param broadcastPolygons true (default) broadcasts covers + geometry
-    *                 (single-pass plan); false takes the shuffle path for
-    *                 polygon tables too large to broadcast. */
+    * @param polygons columns: poly_id (long), geojson (string) */
   def pipJoinPolygonTable(spark: SparkSession, points: DataFrame,
                           polygons: DataFrame, res: Int,
                           cellCol: String = "cell9",
-                          broadcastPolygons: Boolean = true): DataFrame = {
+                          broadcastPolygons: Boolean = true): DataFrame =
+    polygonTableJoin(spark, points, polygons, res, cellCol,
+      if (broadcastPolygons) CoverIndex.MaxDriverBytes else -1L)
+
+  /** Most rows [[boundedRows]] kept on the driver in its last call; for
+    * specs. */
+  @volatile private[graft] var keptPeak = 0
+
+  /** All rows of `df` if their summed `weight` is at most `budget`, else
+    * None; read in one pass. A frame already on the driver (a local
+    * relation) costs no job; any other runs ONE job whose tasks stop once
+    * their own rows pass the budget, and the driver keeps rows only while
+    * the running total stays within it (at most `budget` rows for weights
+    * >= 1). (A `limit(n)` collect scans partitions in growing batches,
+    * one job each.) */
+  private[graft] def boundedRows(df: DataFrame, budget: Long)(weight: InternalRow => Long)
+      : Option[Array[InternalRow]] = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var total = 0L
+    def offer(rows: Array[InternalRow], w: Long): Unit = {
+      total += w
+      if (total <= budget) kept ++= rows else kept.clear()
+      keptPeak = math.max(keptPeak, kept.length)
+    }
+    keptPeak = 0
+    df.queryExecution.executedPlan match {
+      case local: org.apache.spark.sql.execution.LocalTableScanExec =>
+        val rows = local.executeCollect()
+        offer(rows, rows.iterator.map(weight).sum)
+      case plan =>
+        df.sparkSession.sparkContext.runJob(plan.execute(), (it: Iterator[InternalRow]) => {
+          val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+          var w = 0L
+          while (w <= budget && it.hasNext) {
+            val r = it.next()
+            w += weight(r)
+            rows += r.copy()
+          }
+          (rows.toArray, w)
+        }, (_: Int, part: (Array[InternalRow], Long)) => offer(part._1, part._2))
+    }
+    if (total <= budget) Some(kept.toArray) else None
+  }
+
+  /** [[pipJoinPolygonTable]] with the broadcast budget (summed
+    * [[CoverIndex.driverBytes]]) as a parameter; a negative budget always
+    * shuffles. */
+  private[graft] def polygonTableJoin(spark: SparkSession, points: DataFrame,
+                                      polygons: DataFrame, res: Int, cellCol: String,
+                                      maxBroadcastBytes: Long): DataFrame = {
     H3Functions.register(spark)
-    // Each polygon adapts its cover resolution down Geo.coverLadder(res)
-    // (a continental polygon must not tile at the point resolution),
-    // emitting a protrusion-robust cover (Geo.bufferedAnnotatedCover) so
-    // the probe can use cheap bit-parent keys at every ladder resolution.
-    // Cell values at different resolutions never collide (the res nibble
-    // differs), so one join key column serves the whole ladder.
+    if (maxBroadcastBytes >= 0) {
+      val rows = boundedRows(polygons
+        .filter(col("poly_id").isNotNull && col("geojson").isNotNull)
+        .select("poly_id", "geojson"), maxBroadcastBytes)(
+        r => CoverIndex.driverBytes(r.getUTF8String(1), res))
+      rows match {
+        case Some(rs) =>
+          val index = CoverIndex.forGeoJson(spark,
+            rs.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toSeq, res)
+          return CoverIndex.join(points, index, cellCol, idFirst = true)
+        case None =>
+      }
+    }
+    // Huge polygon tables (too big to collect/broadcast): distributed
+    // covers via the generator, shuffled id-only candidate join, full
+    // cells accepted outright, geometry shuffled onto boundary rows
+    // only. The ladder probe is a separate size-hint-only scan
+    // (h3_cover_res, no tiling) — 3 passes over the table total, the
+    // price of never materializing it on the driver. Each polygon adapts
+    // its cover resolution down Geo.coverLadder(res), emitting a
+    // protrusion-robust cover so the probe can use cheap bit-parent keys
+    // at every ladder resolution; cell values at different resolutions
+    // never collide (the res nibble differs), so one join key column
+    // serves the whole ladder.
+    val covers = polygons
+      .select(col("poly_id"),
+        expr(s"h3_polygon_to_cells_annotated(geojson, $res)"))
+      .select("poly_id", "cell", "full")
+    val ladder = polygons
+      .filter(col("geojson").isNotNull)
+      .select(expr(s"h3_cover_res(geojson, $res)").as("r"))
+      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+    if (ladder.isEmpty)
+      return points.limit(0).withColumn("poly_id", lit(0L))
     def ancAt(r: Int): Column =
       if (r == res) col(cellCol) else expr(s"h3_cell_to_parent($cellCol, $r)")
-    def probeFor(ladder: Seq[Int]): DataFrame =
-      // Single present resolution (the common case): one bit-op column,
-      // no Generate node — the join stage stays a straight codegen
-      // pipeline (mirrors pipJoin).
+    // Single present resolution (the common case): one bit-op column, no
+    // Generate node.
+    val probe =
       if (ladder.size == 1) points.withColumn("__anc", ancAt(ladder.head))
       else points.withColumn("__anc", explode(array(ladder.map(ancAt): _*)))
-    if (broadcastPolygons) {
-      // ONE scan of the polygon table, and it is CHEAP: geometry plus the
-      // h3_cover_res ladder hint (a size-only policy evaluation, no
-      // tiling) are collected together — the same geometry a broadcast
-      // build would pin on the driver anyway. The expensive part — the
-      // annotated-cover tiling — is NOT collected through the driver:
-      // materializing ~10^5 cover rows as external Rows and re-encoding
-      // them into a local relation costs more than the tiling itself
-      // (measured 2x on the bench phase). Instead the covers broadcast
-      // runs the generator over an RDD-parallelized rebuild of the
-      // collected geometry: tiling executes distributed at broadcast
-      // build time, emits InternalRows directly, and never rescans the
-      // user's table (RDD rebuild, not the original source).
-      import spark.implicits._
-      val polyRows = polygons
-        .filter(col("geojson").isNotNull)
-        .select(col("poly_id"), col("geojson"),
-          expr(s"h3_cover_res(geojson, $res)").as("__r"))
-        .collect()
-      val ladder = polyRows.filter(!_.isNullAt(2)).map(_.getInt(2))
-        .distinct.sorted.toSeq
-      if (ladder.isEmpty)
-        return points.limit(0).withColumn("poly_id", lit(0L))
-      val geoPairs = polyRows.map(r => (r.getLong(0), r.getString(1))).toSeq
-      // parallelize (not a local relation + repartition): distributes the
-      // tiling without a shuffle job and cannot be folded onto the driver
-      // by ConvertToLocalRelation.
-      val geoRdd = spark.sparkContext.parallelize(
-        geoPairs, Math.min(spark.sparkContext.defaultParallelism, Math.max(1, geoPairs.size)))
-      val coversDf = geoRdd.toDF("poly_id", "geojson")
-        .select(col("poly_id"), expr(s"h3_polygon_to_cells_annotated(geojson, $res)"))
-        .select("poly_id", "cell", "full")
-      val geoDf = geoPairs.toDF("poly_id", "geojson")
-      // Candidate join and geometry lookup are both broadcasts: points are
-      // scanned once and the || short-circuits the ray cast on
-      // fully-contained cells.
-      probeFor(ladder)
-        .join(broadcast(coversDf), col("__anc") === coversDf("cell"))
-        .join(broadcast(geoDf), "poly_id")
-        .filter(col("full") || expr("h3_point_in_polygon(lat, lng, geojson)"))
-        .drop("__anc", "cell", "full", "geojson")
-    } else {
-      // Huge polygon tables (too big to collect/broadcast): distributed
-      // covers via the generator, shuffled id-only candidate join, full
-      // cells accepted outright, geometry shuffled onto boundary rows
-      // only. The ladder probe is a separate size-hint-only scan
-      // (h3_cover_res, no tiling) — 3 passes over the table total, the
-      // price of never materializing it on the driver.
-      val covers = polygons
-        .select(col("poly_id"),
-          expr(s"h3_polygon_to_cells_annotated(geojson, $res)"))
-        .select("poly_id", "cell", "full")
-      val ladder = polygons
-        .filter(col("geojson").isNotNull)
-        .select(expr(s"h3_cover_res(geojson, $res)").as("r"))
-        .distinct().collect().map(_.getInt(0)).sorted.toSeq
-      if (ladder.isEmpty)
-        return points.limit(0).withColumn("poly_id", lit(0L))
-      val geo = polygons.select(col("poly_id"), col("geojson"))
-      val cand = probeFor(ladder)
-        .join(covers, col("__anc") === covers("cell"))
-      val fullHits = cand.filter(col("full")).drop("__anc", "cell", "full")
-      val boundary = cand.filter(!col("full"))
-        .join(geo, "poly_id")
-        .filter(expr("h3_point_in_polygon(lat, lng, geojson)"))
-        .drop("__anc", "cell", "full", "geojson")
-      fullHits.unionByName(boundary)
-    }
+    val geo = polygons.select(col("poly_id"), col("geojson"))
+    val cand = probe.join(covers, col("__anc") === covers("cell"))
+    val fullHits = cand.filter(col("full")).drop("__anc", "cell", "full")
+    val boundary = cand.filter(!col("full"))
+      .join(geo, "poly_id")
+      .filter(expr("h3_point_in_polygon(lat, lng, geojson)"))
+      .drop("__anc", "cell", "full", "geojson")
+    fullHits.unionByName(boundary)
   }
 }
 

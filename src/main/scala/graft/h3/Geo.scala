@@ -348,6 +348,17 @@ object Geo {
     (outCells, outFlags)
   }
 
+  /** The PIP join cover of a geometry for probe resolution `res`: tiled at
+    * its [[adaptiveCoverRes]], protrusion-robust when that is coarser than
+    * `res` (at `res` itself the plain annotated cover is already exact).
+    * Returns (cells, fullFlags), all cells at one resolution. */
+  def adaptiveAnnotatedCover(polys: Array[GeoPolygon], res: Int)
+      : (Array[Long], Array[Boolean]) = {
+    val coverRes = adaptiveCoverRes(polys, res)
+    if (coverRes == res) polygonToCellsAnnotated(polys, coverRes, IntersectsBoundary)
+    else bufferedAnnotatedCover(polys, coverRes)
+  }
+
   def coverageSizeHint(poly: GeoPolygon, res: Int): Long = {
     val r = poly.exterior
     val d1 = math.abs(r.maxLng - r.minLng)

@@ -414,33 +414,52 @@ object GeoCache {
   }
 
   // Memoized annotated covers keyed by (geometry, point res): computing a
-  // cover costs ~ms (tiling + buffering) and pipJoinPolygonTable's plans
-  // evaluate the generator once per polygon per EXECUTION — reused across
-  // the full/boundary branches and repeated runs, the memo amortizes it
-  // to once per executor. Bounded (64 entries x <= ~3 x cap cells).
-  private final val MaxCoverEntries = 64
+  // cover costs ~ms (tiling + buffering) and a polygon table is tiled once
+  // per polygon per EXECUTION (or per index build), so the memo amortizes
+  // it to once per executor. Bounded by total cached cover cells — the
+  // worst case of 64 adaptive covers, each at most ~3 x the cap after the
+  // one-ring buffer — and evicted oldest first, so a table of many small
+  // polygons (200 city geofences are ~0.2M cells) stays memoized whole.
+  private[graft] final val MaxCoverCells: Long = 64L * 3 * graft.h3.Geo.DefaultMaxCoverCells
   private val coverCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.unsafe.types.UTF8String, Int), (Array[Long], Array[Boolean])]()
+  // Insertion order of the memo's keys and their total cell count, both
+  // guarded by `coverOrder` (only a miss takes the lock).
+  private val coverOrder = new java.util.ArrayDeque[(org.apache.spark.unsafe.types.UTF8String, Int)]()
+  private var coverCells = 0L
+  // Miss locks, striped by key hash: two threads missing on one geometry
+  // tile it once, while distinct geometries tile in parallel.
+  private val missLocks = Array.fill(64)(new Object)
+  /** Covers computed (memo misses) since start; for specs. */
+  private[graft] val coverBuilds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Adaptive protrusion-robust annotated cover of a geometry at `res`
-    * (see PolygonToCellsAnnotatedGen), memoized per executor. */
+    * ([[graft.h3.Geo.adaptiveAnnotatedCover]]), memoized per executor. */
   def annotatedCover(geojson: org.apache.spark.unsafe.types.UTF8String,
                      res: Int): (Array[Long], Array[Boolean]) = {
-    var c = coverCache.get((geojson, res))
-    if (c == null) {
-      val polys = parse(geojson)
-      val coverRes = graft.h3.Geo.adaptiveCoverRes(polys, res)
-      // Coarse covers are protrusion-robust (buffered + eroded flags) so
-      // bit-parent probe keys stay exact; at the point resolution the
-      // plain annotated cover is already exact.
-      c = if (coverRes == res)
-        graft.h3.Geo.polygonToCellsAnnotated(
-          polys, coverRes, graft.h3.Geo.IntersectsBoundary)
-      else graft.h3.Geo.bufferedAnnotatedCover(polys, coverRes)
-      if (coverCache.size() > MaxCoverEntries) coverCache.clear()
-      coverCache.put((geojson.clone(), res), c)
+    val c = coverCache.get((geojson, res))
+    if (c != null) c
+    else missLocks((geojson.hashCode * 31 + res) & 63).synchronized {
+      val again = coverCache.get((geojson, res))
+      if (again != null) again else tileAndKeep(geojson, res)
     }
-    c
+  }
+
+  private def tileAndKeep(geojson: org.apache.spark.unsafe.types.UTF8String,
+                          res: Int): (Array[Long], Array[Boolean]) = {
+    val built = graft.h3.Geo.adaptiveAnnotatedCover(parse(geojson), res)
+    coverBuilds.incrementAndGet()
+    val key = (geojson.clone(), res)
+    val n = built._1.length.toLong
+    coverOrder.synchronized {
+      if (n <= MaxCoverCells && coverCache.putIfAbsent(key, built) == null) {
+        coverOrder.addLast(key)
+        coverCells += n
+        while (coverCells > MaxCoverCells)
+          coverCells -= coverCache.remove(coverOrder.removeFirst())._1.length
+      }
+    }
+    built
   }
 
   /** The adaptive cover resolution [[annotatedCover]] will pick for this
@@ -449,6 +468,15 @@ object GeoCache {
     * resolutions of a whole polygon table with one cheap scan. */
   def coverRes(geojson: org.apache.spark.unsafe.types.UTF8String, res: Int): Int =
     graft.h3.Geo.adaptiveCoverRes(parse(geojson), res)
+
+  /** Size hint (cells) of the cover [[annotatedCover]] builds for this
+    * geometry at probe resolution `res`: the hint at its adaptive cover
+    * resolution, no tiling. */
+  def coverSizeHint(geojson: org.apache.spark.unsafe.types.UTF8String, res: Int): Long = {
+    val polys = parse(geojson)
+    val r = graft.h3.Geo.adaptiveCoverRes(polys, res)
+    polys.iterator.map(graft.h3.Geo.coverageSizeHint(_, r)).sum
+  }
 
   /** Exact ray-cast point-in-polygon over the (cached) geometry. */
   def contains(latDeg: Double, lngDeg: Double,

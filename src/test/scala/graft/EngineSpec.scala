@@ -721,6 +721,9 @@ class PolygonTableJoinSpec extends org.scalatest.funsuite.AnyFunSuite {
     val single = graft.engine.SpatialJoin
       .pipJoinPolygonTable(spark, pts, polyTable, res = 9)
     assert(generates(single) == 0, "single-res table must not explode the probe")
+    // The ancestor ladder itself lives on the shuffle path.
+    assert(generates(graft.engine.SpatialJoin.pipJoinPolygonTable(spark, pts, polyTable,
+      res = 9, broadcastPolygons = false)) == 0, "single-res shuffle path must not explode the probe")
     single.limit(1).collect() // plan executes
   }
 

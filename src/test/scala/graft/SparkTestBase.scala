@@ -2,9 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test run. */
+/** One shared local SparkSession for the whole test run. A spec that
+  * stops it (to test behaviour across a restart) leaves the next caller a
+  * fresh session with the same settings. */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
+  private var current: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = create()
+    current
+  }
+
+  private def create(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("h3ospark-test")
