@@ -87,14 +87,20 @@ object CoverIndex {
   private final val BuildBytesPerCell = 26L
 
   /** Driver bytes a polygon table may bring onto the broadcast path, by
-    * size hint: half the heap. The hints bound real covers from above
-    * (about 4x above for 0.1-degree city boxes at res 9), so a real build
-    * stays near an eighth of the heap, and its index (half of
+    * size hint: half the heap, and at most half the session's
+    * `spark.driver.maxResultSize` (0 = unlimited), so the collect never
+    * aborts on Spark's result limit. The hints bound real covers from
+    * above (about 4x above for 0.1-degree city boxes at res 9), so a real
+    * build stays near an eighth of the heap, and its index (half of
     * [[BuildBytesPerCell]]) fits the driver's storage memory (by Spark's
     * defaults half of 0.6 of the heap). Measured on 0.1-degree boxes with
     * a 4 GB driver: even at 10^4 boxes the index path beats the shuffle
     * path. */
-  private[graft] def MaxDriverBytes: Long = Runtime.getRuntime.maxMemory / 2
+  private[graft] def maxDriverBytes(spark: SparkSession): Long = {
+    val heap = Runtime.getRuntime.maxMemory / 2
+    val limit = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (limit <= 0) heap else math.min(heap, limit / 2)
+  }
 
   /** Estimated driver bytes of one polygon on the broadcast path: its
     * GeoJSON text plus its cover's size hint at [[BuildBytesPerCell]]. */

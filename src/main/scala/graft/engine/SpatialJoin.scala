@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
@@ -32,7 +31,7 @@ import graft.spark.H3Functions
   * replicated per bucket) so a hot cell spreads over that many reducers;
   * AQE's skew join handles residual imbalance.
   * `pipJoinPolygonTable(..., broadcastPolygons = false)` — also taken for
-  * a table too large for the driver ([[CoverIndex.MaxDriverBytes]]) —
+  * a table too large for the driver ([[CoverIndex.maxDriverBytes]]) —
   * tiles the table on executors.
   */
 object SpatialJoin {
@@ -56,28 +55,15 @@ object SpatialJoin {
     Geo.adaptiveCoverRes(Array(poly), pointRes)
 
   /** Annotated cover rows (polyId, cell, cellRes, full) for a set of
-    * polygons.
-    *
-    * By default each polygon's cover stays at a single resolution (its
-    * adaptive coverRes): the probe side then computes one ancestor per
-    * distinct coverRes instead of one per compaction level, which is the
-    * cheaper plan when the cover is bounded by [[MaxCoverCells]] anyway.
-    * Pass `compactFull = true` to compact fully-contained cells to mixed
-    * resolutions (smallest broadcast payload; more probe ancestors). */
-  def cover(polys: Seq[Poly], res: Int,
-            compactFull: Boolean = false): Seq[(Long, Long, Int, Boolean)] =
+    * polygons, each polygon's cover at a single resolution (its adaptive
+    * coverRes), so the probe side computes one ancestor per distinct
+    * coverRes. */
+  def cover(polys: Seq[Poly], res: Int): Seq[(Long, Long, Int, Boolean)] =
     polys.flatMap { p =>
       // Buffered + eroded cover so the cheap bit-parent probe key stays
       // exact under child protrusion (see Geo.bufferedAnnotatedCover).
       val (cells, flags) = Geo.adaptiveAnnotatedCover(Array(p.geo), res)
-      if (compactFull) {
-        val full = cells.indices.filter(flags).map(cells).toArray.sortBy(H3.orderKey)
-        val partial = cells.indices.filterNot(flags).map(cells)
-        H3.compactSorted(full).map(c => (p.id, c, H3.getResolution(c), true)) ++
-          partial.map(c => (p.id, c, H3.getResolution(c), false))
-      } else {
-        cells.indices.map(i => (p.id, cells(i), H3.getResolution(cells(i)), flags(i)))
-      }
+      cells.indices.map(i => (p.id, cells(i), H3.getResolution(cells(i)), flags(i)))
     }
 
   /** PIP join: returns `points` columns + `poly_id`, one row per
@@ -165,10 +151,10 @@ object SpatialJoin {
     * Returns `poly_id` + `points` columns, one row per (point, containing
     * polygon) pair.
     *
-    * Broadcast path: ONE scan collects (poly_id, geojson) while the
-    * polygons' estimated driver bytes (GeoJSON plus cover size hints,
-    * [[CoverIndex.driverBytes]]) stay within
-    * [[CoverIndex.MaxDriverBytes]]. Their [[CoverIndex]] is prepared from
+    * Broadcast path: ONE scan ([[BoundedCollect.rows]]) collects
+    * (poly_id, geojson) while the polygons' estimated driver bytes
+    * (GeoJSON plus cover size hints, [[CoverIndex.driverBytes]]) stay
+    * within [[CoverIndex.maxDriverBytes]]. Their [[CoverIndex]] is prepared from
     * the rows (tiled on the driver's cores through the per-JVM cover memo,
     * or reused as is when the content is unchanged) and probed in the
     * points' own stage; an index over [[CoverIndex.MaxRegistryCells]] is
@@ -186,47 +172,7 @@ object SpatialJoin {
                           cellCol: String = "cell9",
                           broadcastPolygons: Boolean = true): DataFrame =
     polygonTableJoin(spark, points, polygons, res, cellCol,
-      if (broadcastPolygons) CoverIndex.MaxDriverBytes else -1L)
-
-  /** Most rows [[boundedRows]] kept on the driver in its last call; for
-    * specs. */
-  @volatile private[graft] var keptPeak = 0
-
-  /** All rows of `df` if their summed `weight` is at most `budget`, else
-    * None; read in one pass. A frame already on the driver (a local
-    * relation) costs no job; any other runs ONE job whose tasks stop once
-    * their own rows pass the budget, and the driver keeps rows only while
-    * the running total stays within it (at most `budget` rows for weights
-    * >= 1). (A `limit(n)` collect scans partitions in growing batches,
-    * one job each.) */
-  private[graft] def boundedRows(df: DataFrame, budget: Long)(weight: InternalRow => Long)
-      : Option[Array[InternalRow]] = {
-    val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    var total = 0L
-    def offer(rows: Array[InternalRow], w: Long): Unit = {
-      total += w
-      if (total <= budget) kept ++= rows else kept.clear()
-      keptPeak = math.max(keptPeak, kept.length)
-    }
-    keptPeak = 0
-    df.queryExecution.executedPlan match {
-      case local: org.apache.spark.sql.execution.LocalTableScanExec =>
-        val rows = local.executeCollect()
-        offer(rows, rows.iterator.map(weight).sum)
-      case plan =>
-        df.sparkSession.sparkContext.runJob(plan.execute(), (it: Iterator[InternalRow]) => {
-          val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-          var w = 0L
-          while (w <= budget && it.hasNext) {
-            val r = it.next()
-            w += weight(r)
-            rows += r.copy()
-          }
-          (rows.toArray, w)
-        }, (_: Int, part: (Array[InternalRow], Long)) => offer(part._1, part._2))
-    }
-    if (total <= budget) Some(kept.toArray) else None
-  }
+      if (broadcastPolygons) CoverIndex.maxDriverBytes(spark) else -1L)
 
   /** [[pipJoinPolygonTable]] with the broadcast budget (summed
     * [[CoverIndex.driverBytes]]) as a parameter; a negative budget always
@@ -235,18 +181,15 @@ object SpatialJoin {
                                       polygons: DataFrame, res: Int, cellCol: String,
                                       maxBroadcastBytes: Long): DataFrame = {
     H3Functions.register(spark)
-    if (maxBroadcastBytes >= 0) {
-      val rows = boundedRows(polygons
+    BoundedCollect.rows(polygons
         .filter(col("poly_id").isNotNull && col("geojson").isNotNull)
         .select("poly_id", "geojson"), maxBroadcastBytes)(
-        r => CoverIndex.driverBytes(r.getUTF8String(1), res))
-      rows match {
-        case Some(rs) =>
-          val index = CoverIndex.forGeoJson(spark,
-            rs.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toSeq, res)
-          return CoverIndex.join(points, index, cellCol, idFirst = true)
-        case None =>
-      }
+        r => CoverIndex.driverBytes(r.getUTF8String(1), res)) match {
+      case Some(rs) =>
+        val index = CoverIndex.forGeoJson(spark,
+          rs.map(r => (r.getLong(0), r.getUTF8String(1).toString)).toSeq, res)
+        return CoverIndex.join(points, index, cellCol, idFirst = true)
+      case None =>
     }
     // Huge polygon tables (too big to collect/broadcast): distributed
     // covers via the generator, shuffled id-only candidate join, full

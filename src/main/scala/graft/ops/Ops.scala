@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.OracleDialect
+import graft.engine.BoundedCollect
 
 /** High-level training-data pipeline operators over the `documents` table:
   * deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard),
@@ -442,13 +443,16 @@ object Ops {
     * reassembled in order. Input: (doc_id, text) with '\n'-separated lines.
     * Output: (doc_id, n_lines, n_kept, clean_text).
     *
-    * Scale shape: the doc-frequency aggregation and the boilerplate set
-    * exchange only (line_fp, doc_id) — never line text; the boilerplate set
-    * (df >= minDocs) is small and broadcasts into the anti join, so line
-    * payloads shuffle exactly once (the per-doc reassembly). Line totals
-    * come straight from the source (no second explode scan). On web
-    * corpora, run per domain bucket (header/footer boilerplate is
-    * domain-local): add the domain to the groupBy key. */
+    * Scale shape: the doc-frequency aggregation exchanges only
+    * (line_fp, doc_id) — never line text. The boilerplate set
+    * (df >= minDocs) is small: up to `broadcastMaxFps` fps it is collected
+    * in one bounded job ([[BoundedCollect.sortedLongs]]) and broadcast to
+    * a per-document kernel, so line text crosses no exchange; past the
+    * cap it feeds an anti join, and line payloads shuffle exactly once
+    * (the per-doc reassembly). Line totals come straight from the source
+    * (no second explode scan). On web corpora, run per domain bucket
+    * (header/footer boilerplate is domain-local): add the domain to the
+    * groupBy key. */
   def lineDedup(spark: SparkSession, docs: DataFrame,
                 minDocs: Int = 2,
                 broadcastMaxFps: Int = 4 << 20,
@@ -478,35 +482,17 @@ object Ops {
       .select("line_fp")
 
     // Fast path (the common case): the boilerplate set is tiny relative
-    // to the corpus. Collect it (capped), broadcast the sorted fingerprint
-    // array, and filter + reassemble each document IN PLACE with one
-    // codegen kernel — no anti-join and no groupBy(doc_id) reassembly, so
-    // the corpus text crosses ZERO exchanges (the df aggregation above
-    // still runs but moves only (line_fp, doc_id) pairs). The cap bounds
-    // driver/executor memory (default 4M fps = 32 MB); above it the
-    // shuffle formulation below remains the big-boiler fallback.
-    // The cap probe collects PRIMITIVE longs (a capped Dataset[Long]
-    // collect), not 4M boxed Rows — the driver's transient peak is the
-    // 32 MB long[] itself, matching the budget the cap advertises.
-    // persist + count + collect, NOT limit(cap+1).collect(): CollectLimit
-    // executes the plan over incrementally larger partition batches and
-    // re-runs the (expensive, corpus-wide) df aggregation up to
-    // log4(partitions) times — the same pathology lmDict documents.
-    import spark.implicits._
-    val fps0: Array[Long] =
-      if (broadcastMaxFps < 0) Array.fill(1)(0L) // sentinel: force shuffle path
-      else {
-        val p = boiler
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (p.count() > broadcastMaxFps) null
-          else p.select(col("line_fp")).as[Long].collect()
-        } finally p.unpersist(blocking = false)
-      }
-    if (fps0 != null && fps0.length <= broadcastMaxFps) {
-      val fps = fps0
-      java.util.Arrays.sort(fps)
-      val bc = spark.sparkContext.broadcast(fps)
+    // to the corpus. Collect it as sorted primitive longs under the cap
+    // (BoundedCollect: one collecting job), broadcast it, and filter +
+    // reassemble each document IN PLACE with one codegen kernel — no
+    // anti-join and no groupBy(doc_id) reassembly, so the corpus text
+    // crosses ZERO exchanges (the df aggregation above still runs but
+    // moves only (line_fp, doc_id) pairs). The cap bounds driver/executor
+    // memory (default 4M fps = 32 MB); above it the shuffle formulation
+    // below remains the big-boiler fallback.
+    val dict = BoundedCollect.sortedLongs(boiler, broadcastMaxFps)
+    if (dict.isDefined) {
+      val bc = spark.sparkContext.broadcast(dict.get)
       val r = org.apache.spark.sql.GraftBridge.column(DropBoilerLinesExpr(
         org.apache.spark.sql.GraftBridge.expression(col("text")), bc))
       docs.select(col("doc_id"), r.as("__r"))
@@ -581,22 +567,9 @@ object Ops {
       .filter(col("df") >= minDocs)
       .select("line_key")
 
-    import spark.implicits._
-    // persist + count + collect (not CollectLimit) — see lineDedup.
-    val fps0: Array[Long] =
-      if (broadcastMaxFps < 0) Array.fill(1)(0L) // sentinel: force shuffle path
-      else {
-        val p = boiler
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (p.count() > broadcastMaxFps) null
-          else p.select(col("line_key")).as[Long].collect()
-        } finally p.unpersist(blocking = false)
-      }
-    if (fps0 != null && fps0.length <= broadcastMaxFps) {
-      val fps = fps0
-      java.util.Arrays.sort(fps)
-      val bc = spark.sparkContext.broadcast(fps)
+    val dict = BoundedCollect.sortedLongs(boiler, broadcastMaxFps)
+    if (dict.isDefined) {
+      val bc = spark.sparkContext.broadcast(dict.get)
       val r = org.apache.spark.sql.GraftBridge.column(DropBoilerLinesSaltedExpr(
         org.apache.spark.sql.GraftBridge.expression(col("text")),
         org.apache.spark.sql.GraftBridge.expression(expr("doc_fingerprint(domain)")),
@@ -1075,21 +1048,6 @@ object Ops {
       .select(col("doc_id"), col("lang"), col("p_lang").as("predicted"), col("score"))
   }
 
-  /** Benchmark decontamination: flag training documents sharing any word
-    * `shingle`-gram with the evaluation set (the GPT-3/Pile n-gram-overlap
-    * methodology). Output: one row per training doc —
-    * (doc_id, n_hits = distinct contaminated n-grams, contaminated).
-    *
-    * Scale design: the eval dictionary is inherently small (benchmarks
-    * are thousands of documents against a 10^12-doc corpus). Fast path
-    * (the common case): collect it once (capped, primitive longs),
-    * broadcast the sorted array, and probe each training document with
-    * one codegen kernel — the corpus crosses ZERO exchanges and is
-    * scanned once. Above the cap (default 4M fps = 32 MB) the shuffle
-    * fallback runs an exploded set-membership join on fp with NOTHING
-    * broadcast (both the dictionary and the per-doc hits aggregate are
-    * unbounded there); the shuffled rows are (doc_id, fp) pairs only,
-    * partial-aggregated map-side first. */
   /** Collect the eval set's distinct shingle-fp dictionary (sorted, for
     * binary-search probes) when it fits under `cap`; None past the cap or
     * for cap < 0. Shared by the batch fast path and the streaming
@@ -1097,13 +1055,9 @@ object Ops {
   private[graft] def evalFpDict(spark: SparkSession, eval: DataFrame,
                                 shingle: Int, cap: Int): Option[Array[Long]] = {
     OpsFunctions.register(spark)
-    import spark.implicits._
-    if (cap < 0) return None
-    val fps = eval
+    BoundedCollect.sortedLongs(eval
       .select(explode(expr(s"shingle_fps(text, $shingle)")).as("fp"))
-      .distinct().limit(cap + 1).select(col("fp")).as[Long].collect()
-    if (fps.length > cap) None
-    else { java.util.Arrays.sort(fps); Some(fps) }
+      .distinct(), cap)
   }
 
   /** Per-row distinct-hit-count probe column against a sorted broadcast
@@ -1118,6 +1072,22 @@ object Ops {
       lit(0L))
   }
 
+  /** Benchmark decontamination: flag training documents sharing any word
+    * `shingle`-gram with the evaluation set (the GPT-3/Pile n-gram-overlap
+    * methodology). Output: one row per training doc —
+    * (doc_id, n_hits = distinct contaminated n-grams, contaminated).
+    *
+    * Scale design: the eval dictionary is inherently small (benchmarks
+    * are thousands of documents against a 10^12-doc corpus). Fast path
+    * (the common case): collect it as sorted primitive longs in one
+    * bounded job ([[BoundedCollect.sortedLongs]]; an over-cap dictionary
+    * never reaches the driver), broadcast it, and probe each training
+    * document with one codegen kernel — the corpus crosses ZERO
+    * exchanges and is scanned once. Above the cap (default 4M fps =
+    * 32 MB) the shuffle fallback runs an exploded set-membership join on
+    * fp with NOTHING broadcast (both the dictionary and the per-doc hits
+    * aggregate are unbounded there); the shuffled rows are (doc_id, fp)
+    * pairs only, partial-aggregated map-side first. */
   def decontaminate(spark: SparkSession, train: DataFrame, eval: DataFrame,
                     shingle: Int = 5, broadcastMaxFps: Int = 4000000): DataFrame = {
     OpsFunctions.register(spark)
@@ -1208,16 +1178,17 @@ object Ops {
     * shuffle — the r5 formulation (`count(*) OVER (PARTITION BY fp)`)
     * instead serialized every occurrence of a hot fp through ONE
     * spilling window task (no map-side partials, AQE skew splitting
-    * does not apply to windows). The duplicated-fp set then re-attaches
-    * to a recomputed occurrence frame: broadcast as a sorted primitive
-    * array probed by a codegen filter when it fits under
-    * `broadcastMaxFps` (the common case — duplicated WINDOW fps are far
-    * rarer than duplicated lines), else an fp semi-join that AQE skew
-    * splitting DOES cover. A second shuffle on doc_id merges overlapping
-    * windows into maximal spans (gaps-and-islands over the running max
-    * end). Worst case two id-only exchanges, no quadratic step, no
-    * unsplittable hot-key task, nothing corpus-sized in one place
-    * (equality with the window formulation is spec-pinned). */
+    * does not apply to windows). The duplicated-fp set is then collected
+    * in one bounded job ([[BoundedCollect.sortedLongs]]) when it fits
+    * under `broadcastMaxFps` (the common case — duplicated WINDOW fps are
+    * far rarer than duplicated lines) and broadcast to a span-merge kernel
+    * over each document; else it re-attaches to a recomputed occurrence
+    * frame by an fp semi-join that AQE skew splitting DOES cover, and a
+    * second shuffle on doc_id merges overlapping windows into maximal
+    * spans (gaps-and-islands over the running max end). Worst case two
+    * id-only exchanges, no quadratic step, no unsplittable hot-key task,
+    * nothing corpus-sized in one place (equality with the window
+    * formulation is spec-pinned). */
   def dedupSpans(spark: SparkSession, docs: DataFrame,
                  window: Int = 50, minCount: Long = 2,
                  broadcastMaxFps: Int = 4 << 20): DataFrame = {
@@ -1236,33 +1207,18 @@ object Ops {
     val dupFps = occ.groupBy("fp").agg(count(lit(1)).as("n_occ"))
       .filter(col("n_occ") >= minCount)
       .select("fp")
-    // Attach the duplicated-fp set back to the occurrence frame. The
-    // persist+count probe (not limit().collect(): CollectLimit re-runs
-    // the aggregation over growing partition batches) bounds the driver
-    // cost; under the cap the probe is a broadcast sorted-array binary
-    // search inside the same codegen stage as the explode — the corpus
-    // text is scanned twice (counts, probe) but never crosses an fp
-    // exchange at all.
-    import spark.implicits._
-    val dupRows: Option[Array[Long]] =
-      if (broadcastMaxFps < 0) None
-      else {
-        val p = dupFps
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (p.count() <= broadcastMaxFps)
-            Some(p.select(col("fp")).as[Long].collect())
-          else None
-        } finally p.unpersist(blocking = false)
-      }
-    dupRows match {
+    // Attach the duplicated-fp set back to the occurrence frame. Under
+    // the cap (BoundedCollect: one collecting job) the probe is a
+    // broadcast sorted-array binary search inside the same codegen stage
+    // as the explode — the corpus text is scanned twice (counts, probe)
+    // but never crosses an fp exchange at all.
+    BoundedCollect.sortedLongs(dupFps, broadcastMaxFps) match {
       case Some(fps) =>
         // Broadcast path: the span merge itself runs INSIDE the probe
         // scan (window fps stream in position order, so gaps-and-islands
         // is a local pass per document) — the probe side carries NO
         // exchange at all: no occurrence re-shuffle on doc_id, no window
         // sort. Rows equal the relational merge below (spec-pinned).
-        java.util.Arrays.sort(fps)
         val bc = spark.sparkContext.broadcast(fps)
         val spansCol = org.apache.spark.sql.GraftBridge.column(SpanMergeExpr(
           org.apache.spark.sql.GraftBridge.expression(col("text")),
@@ -1395,38 +1351,24 @@ object Ops {
 
   /** Collect the LM count dictionary (three sorted fp/count array pairs)
     * plus the total training token count when it fits under `cap`; None
-    * past the cap or for cap < 0. The capped `limit` ships at most cap+1
-    * rows to the driver; `nt` is the sum of unigram counts — free from
-    * the collected rows, no extra corpus scan. Shared by the batch fast
-    * path and the streaming scorer. */
+    * past the cap or for cap < 0, through [[BoundedCollect]] (one
+    * collecting job; an over-cap table never reaches the driver, and the
+    * shuffle path recomputes the lazy counts frame). `nt` is the sum of
+    * unigram counts — free from the collected rows, no extra corpus scan.
+    * Shared by the batch fast path and the streaming scorer. */
   private[graft] def lmDict(spark: SparkSession, train: DataFrame,
                             cap: Int): Option[(LmDict, Long)] = {
-    if (cap < 0) return None
     OpsFunctions.register(spark)
-    import spark.implicits._
-    // persist + count + collect, NOT limit(cap+1).collect(): CollectLimit
-    // executes the plan over incrementally larger partition batches and
-    // RE-RUNS the whole count aggregation up to log_4(partitions) times
-    // (measured 1.6x task-time inflation at 32 cores). The cache is
-    // consumed and released inside this call; past the cap nothing is
-    // collected and the shuffle path recomputes the (lazy) counts frame.
-    val countsDf = lmCounts(train)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows =
-      try {
-        if (countsDf.count() > cap) return None
-        countsDf.select(col("kind"), col("fp"), col("cnt"))
-          .as[(Int, Long, Long)].collect()
-      } finally countsDf.unpersist(blocking = false)
-    val ntVal = rows.iterator.filter(_._1 == 1).map(_._3).sum
-    val fpsA = new Array[Array[Long]](3)
-    val cntA = new Array[Array[Long]](3)
-    for (k <- 1 to 3) {
-      val kr = rows.filter(_._1 == k).sortBy(_._2)
-      fpsA(k - 1) = kr.map(_._2)
-      cntA(k - 1) = kr.map(_._3)
+    BoundedCollect.rows(lmCounts(train), cap)(_ => 1L).map { rows =>
+      val fpsA = new Array[Array[Long]](3)
+      val cntA = new Array[Array[Long]](3)
+      for (k <- 1 to 3) {
+        val kr = rows.filter(_.getInt(0) == k).sortBy(_.getLong(1))
+        fpsA(k - 1) = kr.map(_.getLong(1))
+        cntA(k - 1) = kr.map(_.getLong(2))
+      }
+      (new LmDict(fpsA, cntA), cntA(0).sum)
     }
-    Some((new LmDict(fpsA, cntA), ntVal))
   }
 
   /** Stupid-Backoff scoring column (struct n_tokens/n_tri/n_bi/n_uni/

@@ -687,28 +687,6 @@ case class ShingleHitsExpr(text: Expression, shingle: Int,
     copy(text = c)
 }
 
-/** Membership probe of a long fingerprint against a broadcast SORTED
-  * array (binary search) — the de-skewed [[Ops.dedupSpans]] attach: the
-  * duplicated-fp set filters the occurrence frame inside the same
-  * codegen stage as the explode, so hot fps never cross an exchange. */
-case class FpInSortedSetExpr(fp: Expression,
-                             fps: org.apache.spark.broadcast.Broadcast[Array[Long]])
-    extends UnaryExpression {
-  override def child: Expression = fp
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "fp_in_sorted_set"
-  override protected def nullSafeEval(v: Any): Any =
-    java.util.Arrays.binarySearch(fps.value, v.asInstanceOf[Long]) >= 0
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dupFps", fps,
-      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    defineCodeGen(ctx, ev, v =>
-      s"java.util.Arrays.binarySearch((long[]) $ref.value(), $v) >= 0")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(fp = c)
-}
-
 /** Per-line fingerprints (optionally domain-salted) of a '\n'-lined
   * document — see [[OpsKernel.lineFps]]. salt = -1 for plain line fps. */
 case class LineFpsExpr(text: Expression, salt: Expression)

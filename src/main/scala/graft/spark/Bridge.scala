@@ -13,4 +13,9 @@ object GraftBridge {
     * (private[spark]; specs need it to count jobs deterministically). */
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Whether a stage writes shuffle output (private[spark]; specs tell
+    * AQE's map-stage jobs from collecting jobs by it). */
+  def isShuffleMapStage(s: org.apache.spark.scheduler.StageInfo): Boolean =
+    s.shuffleDepId.isDefined
 }

@@ -560,33 +560,6 @@ case class PolygonToCellsAnnotatedGen(geojson: Expression, res: Expression)
   override def prettyName: String = "h3_polygon_to_cells_annotated"
 }
 
-/** Annotated adaptive cover as one ARRAY<STRUCT<cell, full>> value — the
-  * non-generator twin of [[PolygonToCellsAnnotatedGen]]. Lets a single
-  * scan of a polygon table yield geometry AND covers in one row per
-  * polygon (pipJoinPolygonTable collects that row set once instead of
-  * re-scanning the table for the ladder probe, the covers, and the
-  * geometry join separately). */
-case class CoverAnnotatedExpr(geojson: Expression, res: Expression)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def left: Expression = geojson
-  override def right: Expression = res
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("cell", LongType, nullable = false),
-      StructField("full", BooleanType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "h3_cover_annotated"
-  override protected def nullSafeEval(g: Any, r: Any): Any = {
-    val (cells, full) = GeoCache.annotatedCover(
-      g.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      r.asInstanceOf[Int])
-    new GenericArrayData(
-      cells.indices.map(i => InternalRow(cells(i), full(i))).toArray[Any])
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(geojson = l, res = r)
-}
-
 /** Generator: directed edges of the origin cell. */
 case class OriginToEdgesGen(cell: Expression) extends Generator
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {

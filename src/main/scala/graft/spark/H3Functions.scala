@@ -64,7 +64,6 @@ object H3Functions {
     "h3_polygon_to_cells" -> (es => PolygonToCellsGen(str(es(0)), int(es(1)), int(es(2)))),
     "h3_polygon_to_cells_annotated" -> (es => PolygonToCellsAnnotatedGen(str(es(0)), int(es(1)))),
     "h3_cover_res" -> (es => CoverResExpr(str(es(0)), int(es(1)))),
-    "h3_cover_annotated" -> (es => CoverAnnotatedExpr(str(es(0)), int(es(1)))),
     "h3_point_in_polygon" -> (es => PointInPolygonExpr(dbl(es(0)), dbl(es(1)), str(es(2)))),
     // Directed edges.
     "h3_cells_to_directed_edge" -> (es => CellsToEdge(lng(es(0)), lng(es(1)))),

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{CoverIndex, Pages, SpatialJoin}
+import graft.engine.{BoundedCollect, CoverIndex, Pages, SpatialJoin}
 import graft.spark.GeoCache
 
 /** The prepared cover index behind both broadcast PIP joins, the cover
@@ -143,12 +143,19 @@ class CoverIndexSpec extends AnyFunSuite {
 
   test("the bounded collect keeps at most budget rows over all partitions") {
     val df = spark.range(0, 40, 1, 8).toDF("id") // 8 partitions of 5 rows
-    val (over, jobs) = jobsDuring(spark)(SpatialJoin.boundedRows(df, 10)(_ => 1L))
+    val (over, jobs) = jobsDuring(spark)(BoundedCollect.rows(df, 10)(_ => 1L))
     assert(over.isEmpty && jobs == 1)
-    assert(SpatialJoin.keptPeak <= 11, s"driver kept ${SpatialJoin.keptPeak} rows")
-    assert(SpatialJoin.boundedRows(df, 39)(_ => 1L).isEmpty)
-    assert(SpatialJoin.boundedRows(df, 40)(_ => 1L).map(_.map(_.getLong(0)).sorted.toSeq)
+    assert(BoundedCollect.keptPeak <= 11, s"driver kept ${BoundedCollect.keptPeak} rows")
+    assert(BoundedCollect.rows(df, 39)(_ => 1L).isEmpty)
+    assert(BoundedCollect.rows(df, 40)(_ => 1L).map(_.map(_.getLong(0)).sorted.toSeq)
       .contains((0L until 40L).toSeq))
+  }
+
+  test("the polygon-table budget stays within the session's driver result limit") {
+    val limit = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    assert(limit > 0)
+    assert(CoverIndex.maxDriverBytes(spark) <= limit / 2,
+      s"budget ${CoverIndex.maxDriverBytes(spark)} vs maxResultSize $limit")
   }
 
   test("stopping and restarting the SparkSession never serves a stale broadcast") {
