@@ -187,7 +187,7 @@ object BenchExtra {
         .parquet(d.toString)
       deleteDir(d)
     }
-    locally {
+    if (only.forall(_.contains("ice_stats_job"))) {
       val d = java.nio.file.Files.createTempDirectory("graft-extra-stats")
       icePts.withColumn("__part", col("cell_p").cast("string"))
         .hint("rebalance", col("__part"))

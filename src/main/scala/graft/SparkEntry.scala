@@ -192,18 +192,6 @@ object SparkEntry {
 
   // -------------------------------------------------------------------
 
-  /** Flagship: Paris PIP join + res-5 tile roll-up on sf0.001. */
-  def entry(spark: SparkSession): DataFrame = {
-    registerAll(spark)
-    val sfDir = "/root/testdata/sf0.001"
-    val pts = Pages.indexedPages(spark, sfDir)
-    val paris = SpatialJoin.loadShape("/root/reference/dataset/shapes/Paris.geojson")
-      .zipWithIndex.map { case (g, i) => SpatialJoin.Poly(i.toLong, g) }.toSeq
-    val joined = SpatialJoin.pipJoin(spark, pts, paris, res = 9)
-    joined.groupBy(expr("h3_cell_to_parent(cell9, 5)").as("tile"))
-      .agg(count(lit(1)).as("n_pages"), countDistinct("url").as("n_urls"))
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- H3 bit-level kernel (exact DuckDB oracles) ---
     "h3_bitops" -> ((s, dir) => {

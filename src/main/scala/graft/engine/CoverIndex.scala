@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.functions.{array, col, explode, expr, lit, pmod, xxhash64}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,7 +18,8 @@ import graft.spark.GeoCache
 /** Prepared cover index: the annotated covers of one polygon set at one
   * probe resolution, tiled once, held as sorted primitive arrays and
   * broadcast once — the build side of both broadcast PIP joins
-  * ([[SpatialJoin.pipJoin]] and [[SpatialJoin.pipJoinPolygonTable]]).
+  * ([[SpatialJoin.pipJoin]] and [[SpatialJoin.pipJoinPolygonTable]]) and
+  * of the salted shuffle `pipJoin`.
   *
   * Entry `i` is cover cell `cells(i)` of polygon `slots(i)`, flagged
   * `full(i)` when every point whose bit-ancestor is that cell lies inside
@@ -30,7 +31,7 @@ import graft.spark.GeoCache
   */
 final class CoverIndex private (
     cells: Array[Long], slots: Array[Int], full: Array[Boolean],
-    resolutions: Array[Int], ids: Array[Long],
+    private[engine] val resolutions: Array[Int], ids: Array[Long],
     geoms: Array[Array[Geo.GeoPolygon]]) extends Serializable {
 
   def size: Int = cells.length
@@ -72,6 +73,8 @@ final class CoverIndex private (
     }
 
   def polyId(entry: Int): Long = ids(slots(entry))
+
+  def cell(entry: Int): Long = cells(entry)
 }
 
 object CoverIndex {
@@ -255,14 +258,56 @@ object CoverIndex {
     * codegen stage; nothing shuffles. */
   def join(points: DataFrame, index: Broadcast[CoverIndex], cellCol: String,
            idFirst: Boolean = false): DataFrame = {
-    def e(c: Column): Expression = GraftBridge.expression(c)
-    val entry = col("__cover")
-    val id = GraftBridge.column(CoverPolyId(e(entry), index)).as("poly_id")
+    val id = GraftBridge.column(CoverPolyId(e(col("__cover")), index)).as("poly_id")
     points.withColumn("__cover", explode(GraftBridge.column(CoverProbe(e(col(cellCol)), index))))
-      .filter(GraftBridge.column(CoverAccept(e(entry), e(col("lat")), e(col("lng")), index)))
+      .filter(accepted(index))
       .select((if (idFirst) Seq(id, col("*")) else Seq(col("*"), id)): _*)
       .drop("__cover")
   }
+
+  /** [[join]] as a shuffle join, for hot probe cells: each probe row
+    * takes a deterministic salt in [0, `saltBuckets`), and every entry is
+    * replicated once per salt, so one hot cover cell spreads over
+    * `saltBuckets` reducers (AQE's skew join is the backstop). The entry
+    * side is generated from the broadcast index on the executors; the
+    * join is on (ancestor, salt), then the same full-or-ray-cast filter.
+    * Same rows and columns as [[join]]. */
+  def shuffleJoin(points: DataFrame, index: Broadcast[CoverIndex], cellCol: String,
+                  res: Int, saltBuckets: Int): DataFrame = {
+    require(saltBuckets >= 1, s"saltBuckets must be at least 1, got $saltBuckets")
+    val entries = points.sparkSession.range(index.value.size.toLong * saltBuckets)
+      .select(expr(s"CAST(id DIV $saltBuckets AS INT)").as("__cover"),
+        expr(s"CAST(id % $saltBuckets AS INT)").as("__cover_salt"))
+      .withColumn("__cover_cell", GraftBridge.column(CoverCell(e(col("__cover")), index)))
+    val probe = ancestors(points, cellCol, res, index.value.resolutions.toSeq)
+      .withColumn("__salt", pmod(xxhash64(col(cellCol), col("lat"), col("lng")),
+        lit(saltBuckets)).cast("int"))
+    probe.join(entries, col("__anc") === col("__cover_cell") &&
+        col("__salt") === col("__cover_salt"))
+      .filter(accepted(index))
+      .select(col("*"), GraftBridge.column(CoverPolyId(e(col("__cover")), index)).as("poly_id"))
+      .drop("__anc", "__salt", "__cover", "__cover_salt", "__cover_cell")
+  }
+
+  /** The probe rows of a shuffle join: rows with both coordinates (a row
+    * without one joins no polygon, on every path), each with `__anc`, its
+    * cell's bit-ancestor at each cover resolution in `ress`. One
+    * resolution (the common case) is one bit-op column, or the cell
+    * itself at the probe resolution `res`, with no Generate node. */
+  private[engine] def ancestors(points: DataFrame, cellCol: String, res: Int,
+                                ress: Seq[Int]): DataFrame = {
+    def at(r: Int): Column =
+      if (r == res) col(cellCol) else expr(s"h3_cell_to_parent($cellCol, $r)")
+    val located = points.filter(col("lat").isNotNull && col("lng").isNotNull)
+    if (ress.size == 1) located.withColumn("__anc", at(ress.head))
+    else located.withColumn("__anc", explode(array(ress.map(at): _*)))
+  }
+
+  private def e(c: Column): Expression = GraftBridge.expression(c)
+
+  /** Full cell or exact ray cast for the matched entry `__cover`. */
+  private def accepted(index: Broadcast[CoverIndex]): Column =
+    GraftBridge.column(CoverAccept(e(col("__cover")), e(col("lat")), e(col("lng")), index))
 }
 
 /** Cover entries matching a probe cell (see [[CoverIndex.probe]]). */
@@ -314,6 +359,20 @@ case class CoverPolyId(entry: Expression, index: Broadcast[CoverIndex])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("coverIndex", index, classOf[Broadcast[_]].getName)
     defineCodeGen(ctx, ev, i => s"((graft.engine.CoverIndex) $ref.value()).polyId($i)")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(entry = c)
+}
+
+/** Cover cell of an entry. */
+case class CoverCell(entry: Expression, index: Broadcast[CoverIndex])
+    extends UnaryExpression {
+  override def child: Expression = entry
+  override def dataType: DataType = LongType
+  override def prettyName: String = "h3_cover_cell"
+  override protected def nullSafeEval(i: Any): Any = index.value.cell(i.asInstanceOf[Int])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("coverIndex", index, classOf[Broadcast[_]].getName)
+    defineCodeGen(ctx, ev, i => s"((graft.engine.CoverIndex) $ref.value()).cell($i)")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(entry = c)
 }

@@ -1,38 +1,37 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types._
 
 import graft.h3.{Geo, H3}
 import graft.spark.H3Functions
 
 /** H3-bucketed point-in-polygon spatial join.
   *
-  * Strategy: polygons are tiled into an annotated cover (fully-contained
-  * cells and boundary cells, at each polygon's adaptive cover resolution).
-  * A probe row matches a cover cell through its cell's bit-ancestor at
-  * each cover resolution. Rows landing on a fully-contained cover cell are
-  * accepted without further work; rows on boundary cells pass through an
-  * exact ray-cast PIP filter.
+  * Polygons are tiled into an annotated cover: fully contained cells and
+  * boundary cells, at each polygon's adaptive cover resolution. A probe
+  * row matches a cover cell through its cell's bit-ancestor at each cover
+  * resolution. Rows on a fully contained cell are accepted outright; rows
+  * on a boundary cell take the exact ray cast. A row without `lat` or
+  * `lng` joins no polygon.
   *
-  * Broadcast paths (the default for both call shapes): the polygon set is
-  * tiled ONCE into a prepared [[CoverIndex]] (sorted cover cells probed
-  * by binary search, flags, geometry) and broadcast once; later calls on
-  * the same content in the same SparkContext reuse it, with no tiling and
-  * no new broadcast. The probe, the explode of its matches and the exact
-  * filter all run in the probe side's own codegen stage.
+  * One prepared index: a polygon set that reaches the driver (a
+  * `Seq[Poly]`, or a polygon table within [[CoverIndex.maxDriverBytes]])
+  * is tiled ONCE into a [[CoverIndex]] (sorted cover cells, flags,
+  * geometry) and broadcast once; later calls on the same content in the
+  * same SparkContext reuse it, with no tiling and no new broadcast. It is
+  * reached in one of two ways:
+  *  - a map-side probe (the default): the binary-search probe, the explode
+  *    of its matches and the exact filter run in the probe side's own
+  *    codegen stage ([[CoverIndex.join]]);
+  *  - a salted shuffle (`pipJoin(..., broadcastCover = false)`): each
+  *    probe row takes one of `saltBuckets` salts and the index entries are
+  *    replicated per salt, so a hot cell spreads over that many reducers;
+  *    AQE's skew join handles residual imbalance ([[CoverIndex.shuffleJoin]]).
   *
-  * Shuffle paths, for covers too large to broadcast: `pipJoin(...,
-  * broadcastCover = false)` shuffles both sides on the cover cell, salting
-  * each probe row into one of `saltBuckets` buckets (the cover side is
-  * replicated per bucket) so a hot cell spreads over that many reducers;
-  * AQE's skew join handles residual imbalance.
-  * `pipJoinPolygonTable(..., broadcastPolygons = false)` — also taken for
-  * a table too large for the driver ([[CoverIndex.maxDriverBytes]]) —
-  * tiles the table on executors.
+  * The distributed table path (`pipJoinPolygonTable(...,
+  * broadcastPolygons = false)`, also taken for a table too large for the
+  * driver) tiles the table on executors and never collects it.
   */
 object SpatialJoin {
 
@@ -56,8 +55,7 @@ object SpatialJoin {
 
   /** Annotated cover rows (polyId, cell, cellRes, full) for a set of
     * polygons, each polygon's cover at a single resolution (its adaptive
-    * coverRes), so the probe side computes one ancestor per distinct
-    * coverRes. */
+    * coverRes): the entries a [[CoverIndex]] of `polys` holds, as rows. */
   def cover(polys: Seq[Poly], res: Int): Seq[(Long, Long, Int, Boolean)] =
     polys.flatMap { p =>
       // Buffered + eroded cover so the cheap bit-parent probe key stays
@@ -74,72 +72,17 @@ object SpatialJoin {
     * @param polys     polygon set.
     * @param res       probe/boundary cell resolution.
     * @param broadcastCover true (default) probes the broadcast
-    *                  [[CoverIndex]] of `polys`; false shuffles both sides
-    *                  on the cover cell, salted into `saltBuckets`.
+    *                  [[CoverIndex]] of `polys` map-side; false shuffle-joins
+    *                  the points to it, salted into `saltBuckets`.
     */
   def pipJoin(spark: SparkSession, points: DataFrame, polys: Seq[Poly],
               res: Int, cellCol: String = "cell9",
               broadcastCover: Boolean = true,
               saltBuckets: Int = 8): DataFrame = {
     H3Functions.register(spark)
-    if (broadcastCover)
-      return CoverIndex.join(points, CoverIndex.forPolys(spark, polys, res), cellCol)
-    import spark.implicits._
-
-    val coverRows = cover(polys, res)
-    val coverResolutions = coverRows.map(_._3).distinct.sorted
-
-    val coverDf = coverRows.toDF("poly_id", "cover_cell", "cover_res", "full")
-
-    // Probe ancestors, one cheap bit-parent per distinct cover resolution.
-    //
-    // CORRECTNESS: H3 children protrude beyond their parents, so a point's
-    // bit-ancestor can differ from its geometric cell at a coarse cover
-    // resolution (observed ~1 per 10^6 matched rows as a lost inside point
-    // and a falsely full-accepted outside point). Rather than computing
-    // geometric cells per point (a full latLngToCell per cover resolution
-    // on the hot path), coarse covers are BUFFERED by one ring for
-    // completeness and their full flags ERODED by one ring for sound
-    // acceptance (Geo.bufferedAnnotatedCover) — the probe stays a 3-bit-op
-    // parent truncation. The broadcast CoverIndex probes the same keys.
-    // Single cover resolution (the common case — all polygons fit the cap
-    // at one ladder res): no Generate node, the probe key is one bit-op
-    // column.
-    val probe =
-      if (coverResolutions.size == 1) {
-        points.withColumn("__anc",
-          expr(s"h3_cell_to_parent($cellCol, ${coverResolutions.head})"))
-      } else {
-        val ancestors = array(coverResolutions.map { r =>
-          expr(s"h3_cell_to_parent($cellCol, $r)")
-        }: _*)
-        points.withColumn("__anc", explode(ancestors))
-      }
-
-    // Hot probe cells (city-cluster skew) are salted: the cover side is
-    // replicated per salt bucket, the probe side picks a deterministic
-    // per-row salt, so one hot cover cell spreads over `saltBuckets`
-    // reducers. AQE's skew-join is the backstop for residual imbalance.
-    val saltedCover = coverDf.withColumn("__salt",
-      explode(array((0 until saltBuckets).map(lit): _*)))
-    val saltedProbe = probe.withColumn("__salt",
-      pmod(xxhash64(col(cellCol), col("lat"), col("lng")),
-        lit(saltBuckets)).cast("int"))
-    val joined = saltedProbe.join(saltedCover,
-      saltedProbe("__anc") === saltedCover("cover_cell") &&
-        saltedProbe("__salt") === saltedCover("__salt"))
-      .drop("__salt")
-
-    val polyMap = polys.map(p => p.id -> p.geo).toMap
-    val pip = org.apache.spark.sql.GraftBridge.column(PointInPolygonSet(
-      org.apache.spark.sql.GraftBridge.expression(col("poly_id")),
-      org.apache.spark.sql.GraftBridge.expression(col("lat")),
-      org.apache.spark.sql.GraftBridge.expression(col("lng")),
-      polyMap))
-
-    joined
-      .filter(col("full") || pip)
-      .drop("__anc", "cover_cell", "cover_res", "full")
+    val index = CoverIndex.forPolys(spark, polys, res)
+    if (broadcastCover) CoverIndex.join(points, index, cellCol)
+    else CoverIndex.shuffleJoin(points, index, cellCol, res, saltBuckets)
   }
 
   /** Loads the reference shape fixtures as polygons (degrees GeoJSON). */
@@ -212,13 +155,7 @@ object SpatialJoin {
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
     if (ladder.isEmpty)
       return points.limit(0).withColumn("poly_id", lit(0L))
-    def ancAt(r: Int): Column =
-      if (r == res) col(cellCol) else expr(s"h3_cell_to_parent($cellCol, $r)")
-    // Single present resolution (the common case): one bit-op column, no
-    // Generate node.
-    val probe =
-      if (ladder.size == 1) points.withColumn("__anc", ancAt(ladder.head))
-      else points.withColumn("__anc", explode(array(ladder.map(ancAt): _*)))
+    val probe = CoverIndex.ancestors(points, cellCol, res, ladder)
     val geo = polygons.select(col("poly_id"), col("geojson"))
     val cand = probe.join(covers, col("__anc") === covers("cell"))
     val fullHits = cand.filter(col("full")).drop("__anc", "cell", "full")
@@ -230,8 +167,9 @@ object SpatialJoin {
   }
 }
 
-/** Serializable PIP tester shipped into generated code via a plan
-  * reference object (keeps whole-stage codegen intact). */
+/** Exact ray-cast test of a point against one polygon of a set. The joins
+  * test through [[CoverIndex.accept]]; this is the kernel that perfbench's
+  * `h3.pip_raycast_ns` times, so it stays as the measured layer. */
 final class PipTester(polys: Map[Long, Geo.GeoPolygon]) extends Serializable {
   private val ids: Array[Long] = polys.keys.toArray.sorted
   private val geos: Array[Geo.GeoPolygon] = ids.map(polys)
@@ -242,34 +180,4 @@ final class PipTester(polys: Map[Long, Geo.GeoPolygon]) extends Serializable {
     else geos(idx).containsCentroid(
       Math.toRadians(latDeg), Math.toRadians(lngDeg))
   }
-}
-
-/** Exact ray-cast point-in-polygon test against a broadcast polygon map.
-  * Only evaluated for probe rows landing on boundary cover cells; fully
-  * codegen-compatible so the join stage stays inside WSCG. */
-case class PointInPolygonSet(polyId: Expression, lat: Expression, lng: Expression,
-                             polys: Map[Long, Geo.GeoPolygon])
-    extends TernaryExpression {
-  override def first: Expression = polyId
-  override def second: Expression = lat
-  override def third: Expression = lng
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "h3_point_in_polygon"
-
-  @transient private lazy val tester = new PipTester(polys)
-
-  override protected def nullSafeEval(id: Any, la: Any, ln: Any): Any =
-    tester.test(id.asInstanceOf[Long], la.asInstanceOf[Double], ln.asInstanceOf[Double])
-
-  override def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("pipTester", new PipTester(polys),
-      classOf[PipTester].getName)
-    nullSafeCodeGen(ctx, ev, (id, la, ln) =>
-      s"${ev.value} = $ref.test($id, $la, $ln);")
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(polyId = f, lat = s, lng = t)
 }

@@ -1,66 +1,11 @@
 package graft.spark
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.h3.H3
-
-/** 1-based lookup into a CONSTANT array held as a plan reference object —
-  * the optimized form of `element_at(array(<literals...>), idx)`, which
-  * codegen otherwise rebuilds as a fresh GenericArrayData on EVERY row
-  * (40 stores + 2 allocations per row for the 40-entry city tables on the
-  * synthesis hot path). Only constructed by [[H3OptimizerRule]] behind an
-  * in-bounds guard, so out-of-range/null indices keep the original
-  * element_at semantics (ANSI error included) via the guard's fallback. */
-case class LiteralArrayLookup(index: Expression, values: Array[Any],
-                              elemType: DataType)
-    extends UnaryExpression {
-  override def child: Expression = index
-  override def dataType: DataType = elemType
-  override def prettyName: String = "literal_array_lookup"
-  // The guarding If proves 1 <= index <= length, and the rule only fires
-  // for non-null literals, so the lookup itself never yields null.
-  override def nullable: Boolean = index.nullable
-
-  @transient private lazy val boxed: Array[Any] = values
-
-  override protected def nullSafeEval(i: Any): Any =
-    boxed(i.asInstanceOf[Int] - 1)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    elemType match {
-      case DoubleType =>
-        val arr = values.map(_.asInstanceOf[Double])
-        val ref = ctx.addReferenceObj("litArr", arr, "double[]")
-        defineCodeGen(ctx, ev, i => s"$ref[$i - 1]")
-      case LongType =>
-        val arr = values.map(_.asInstanceOf[Long])
-        val ref = ctx.addReferenceObj("litArr", arr, "long[]")
-        defineCodeGen(ctx, ev, i => s"$ref[$i - 1]")
-      case IntegerType =>
-        val arr = values.map(_.asInstanceOf[Int])
-        val ref = ctx.addReferenceObj("litArr", arr, "int[]")
-        defineCodeGen(ctx, ev, i => s"$ref[$i - 1]")
-      case StringType =>
-        val arr = values.map(_.asInstanceOf[UTF8String])
-        val ref = ctx.addReferenceObj("litArr", arr,
-          "org.apache.spark.unsafe.types.UTF8String[]")
-        defineCodeGen(ctx, ev, i => s"$ref[$i - 1]")
-      case _ =>
-        val ref = ctx.addReferenceObj("litArr", values, "java.lang.Object[]")
-        defineCodeGen(ctx, ev, i =>
-          s"(${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-            .boxedType(elemType)}) $ref[$i - 1]")
-    }
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(index = c)
-}
 
 /** H3-aware algebraic rewrites.
   *

@@ -127,6 +127,49 @@ class CoverIndexSpec extends AnyFunSuite {
       broadcastPolygons = false)) == expected)
   }
 
+  test("a row without a coordinate joins no polygon on any of the four paths") {
+    val s = spark
+    import s.implicits._
+    val js = scala.io.Source.fromURL(getClass.getResource("/h3/shapes/Paris.geojson")).mkString
+    val paris = polys(Seq(1L -> js))
+    // A res-9 cell under a full cover cell: the full-cell accept needs no
+    // coordinate, so only the null rule keeps rows 2-4 out.
+    val full = SpatialJoin.cover(paris, 9).collectFirst { case (_, c, _, true) => c }.get
+    val cell = graft.h3.H3.cellToCenterChild(full, 9)
+    val Array(lat, lng) = graft.h3.H3.cellToLatLng(cell)
+    val pts = Seq[(Long, Option[Double], Option[Double], Long)]((1L, Some(lat), Some(lng), cell),
+      (2L, None, None, cell), (3L, None, Some(lng), cell), (4L, Some(lat), None, cell))
+      .toDF("page_id", "lat", "lng", "cell9")
+    val t = table(spark, Seq(1L -> js))
+    val wrong = Seq(
+        "broadcast" -> SpatialJoin.pipJoin(spark, pts, paris, res = 9),
+        "shuffle" -> SpatialJoin.pipJoin(spark, pts, paris, res = 9, broadcastCover = false),
+        "table" -> SpatialJoin.pipJoinPolygonTable(spark, pts, t, res = 9),
+        "table shuffle" -> SpatialJoin.pipJoinPolygonTable(spark, pts, t, res = 9,
+          broadcastPolygons = false))
+      .map { case (path, df) => path -> pairs(df) }.filter(_._2 != Set(1L -> 1L))
+    assert(wrong.isEmpty)
+  }
+
+  test("the shuffle path joins against the index a broadcast call prepared") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def localScans(p: SparkPlan): Int = (p match {
+      case a: AdaptiveSparkPlanExec => localScans(a.executedPlan)
+      case q: QueryStageExec => localScans(q.plan)
+      case _: LocalTableScanExec => 1
+      case _ => 0
+    }) + p.children.map(localScans).sum
+    val pts = points(spark)
+    val geo = polys(fences(0.0593).take(40))
+    val viaIndex = pairs(SpatialJoin.pipJoin(spark, pts, geo, res = 9))
+    val b0 = CoverIndex.builds.get
+    val shuffled = SpatialJoin.pipJoin(spark, pts, geo, res = 9, broadcastCover = false)
+    assert(pairs(shuffled) == viaIndex && viaIndex.nonEmpty)
+    assert(CoverIndex.builds.get == b0, "the shuffle call built an index")
+    assert(localScans(shuffled.queryExecution.executedPlan) == 0, "cover rows shipped from the driver")
+  }
+
   test("a polygon table past the broadcast budget takes the shuffle path with equal rows") {
     def probesIndex(df: DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("h3_cover_probe")

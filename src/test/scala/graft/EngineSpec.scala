@@ -724,6 +724,11 @@ class PolygonTableJoinSpec extends org.scalatest.funsuite.AnyFunSuite {
     // The ancestor ladder itself lives on the shuffle path.
     assert(generates(graft.engine.SpatialJoin.pipJoinPolygonTable(spark, pts, polyTable,
       res = 9, broadcastPolygons = false)) == 0, "single-res shuffle path must not explode the probe")
+    val seqPolys = Seq("Paris", "SanFranciscoHole", "Rabi").zipWithIndex.map { case (n2, i) =>
+      SpatialJoin.Poly(i + 1L, Geo.parseGeoJson(shapeJson(n2))(0))
+    }
+    assert(generates(SpatialJoin.pipJoin(spark, pts, seqPolys, res = 9,
+      broadcastCover = false)) == 0, "single-res Seq shuffle path must not explode the probe")
     single.limit(1).collect() // plan executes
   }
 
