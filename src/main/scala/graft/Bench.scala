@@ -507,11 +507,9 @@ object Bench {
     // Phase 10: hot-cell salting under measurement — the shuffle-path PIP
     // join against a pathological hot cell (half the points inside ONE
     // res-9 cell), with and without probe-side salting; reducer-time
-    // spread (max task ms) shows what the salt buys. Auto-broadcast is
-    // disabled for this phase only: below the broadcast threshold Spark
-    // picks BHJ and there is no probe shuffle to skew (measured — salting
-    // is pure overhead there); the salted shuffle path exists for covers
-    // too large to broadcast.
+    // spread (max task ms) shows what the salt buys. The salted entry
+    // side is hinted shuffle_merge, so the join shuffles at any
+    // auto-broadcast threshold.
     val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val taskListener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
@@ -539,11 +537,8 @@ object Bench {
           broadcastCover = false, saltBuckets = buckets)
         .agg(count(lit(1))).collect()
     }
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     measure("pip_shuffle_unsalted", reps) { maxTaskUnsalted = saltRun(1) }
     measure("pip_shuffle_salted", reps) { maxTaskSalted = saltRun(8) }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
     spark.sparkContext.removeSparkListener(taskListener)
 
     val docsPerSec = nDocs / tJoin

@@ -269,9 +269,11 @@ object CoverIndex {
     * takes a deterministic salt in [0, `saltBuckets`), and every entry is
     * replicated once per salt, so one hot cover cell spreads over
     * `saltBuckets` reducers (AQE's skew join is the backstop). The entry
-    * side is generated from the broadcast index on the executors; the
-    * join is on (ancestor, salt), then the same full-or-ray-cast filter.
-    * Same rows and columns as [[join]]. */
+    * side is generated from the broadcast index on the executors and
+    * hinted `shuffle_merge`: it is small, so at any auto-broadcast
+    * threshold the planner would otherwise broadcast it and the salt
+    * would do nothing. The join is on (ancestor, salt), then the same
+    * full-or-ray-cast filter. Same rows and columns as [[join]]. */
   def shuffleJoin(points: DataFrame, index: Broadcast[CoverIndex], cellCol: String,
                   res: Int, saltBuckets: Int): DataFrame = {
     require(saltBuckets >= 1, s"saltBuckets must be at least 1, got $saltBuckets")
@@ -279,6 +281,7 @@ object CoverIndex {
       .select(expr(s"CAST(id DIV $saltBuckets AS INT)").as("__cover"),
         expr(s"CAST(id % $saltBuckets AS INT)").as("__cover_salt"))
       .withColumn("__cover_cell", GraftBridge.column(CoverCell(e(col("__cover")), index)))
+      .hint("shuffle_merge")
     val probe = ancestors(points, cellCol, res, index.value.resolutions.toSeq)
       .withColumn("__salt", pmod(xxhash64(col(cellCol), col("lat"), col("lng")),
         lit(saltBuckets)).cast("int"))

@@ -158,7 +158,6 @@ object Icelite {
                      partitionCol: String,
                      failAfter: Int = Int.MaxValue,
                      lineage: String = "",
-                     statsFromStaged: Boolean = true,
                      sortCols: Seq[String] = Nil,
                      parquetBlockBytes: Long = -1L,
                      bloomCols: Seq[String] = Nil,
@@ -177,7 +176,7 @@ object Icelite {
 
     val (staging, stats) = stageWithStats(spark, remaining, remaining0.schema,
       root, partitionCol, df.columns.filterNot(_ == partitionCol),
-      statsFromStaged, sortCols, parquetBlockBytes, bloomCols, bloomBits)
+      sortCols, parquetBlockBytes, bloomCols, bloomBits)
 
     // Promote loop: atomic rename per bucket + batched manifest commits
     // (driver-side only — no further Spark jobs). Each commit appends one
@@ -275,7 +274,7 @@ object Icelite {
     * (tasks x buckets small files; at 41k buckets and 10^4 tasks that is
     * 10^8 files); clustered, file count equals bucket count. Then one
     * stats job computes per-bucket row counts + order-independent
-    * xxhash64-xor content checksums, from the STAGED bytes by default
+    * xxhash64-xor content checksums, from the STAGED bytes
     * (the manifest then describes exactly what was staged, and the input
     * pipeline — possibly expensive — runs once). NULL partition values
     * are rejected (they stage as Hive's default-partition dir and would
@@ -321,7 +320,6 @@ object Icelite {
                              schema: org.apache.spark.sql.types.StructType,
                              root: String, partitionCol: String,
                              dataCols: Seq[String],
-                             statsFromStaged: Boolean,
                              sortCols: Seq[String] = Nil,
                              parquetBlockBytes: Long = -1L,
                              bloomCols: Seq[String] = Nil,
@@ -374,9 +372,7 @@ object Icelite {
         s"icelite: partition column '$partitionCol' contains NULL values; " +
           "map nulls to an explicit sentinel first")
     val quoted = dataCols.map(c => s"`$c`")
-    val statsSrc =
-      if (statsFromStaged) spark.read.schema(schema).parquet(staging.toString)
-      else withPart
+    val statsSrc = spark.read.schema(schema).parquet(staging.toString)
     // Iceberg-style per-bucket COLUMN statistics: min/max for every
     // integral data column ride along in the same stats job, enabling
     // manifest-level range pruning (readWhereRange) on non-partition
@@ -489,7 +485,7 @@ object Icelite {
       else withPart0.filter(!col("__part").isInCollection(done))
     val (staging, stats) = stageWithStats(spark, withPart, withPart0.schema,
       root, partitionCol, df.columns.filterNot(_ == partitionCol),
-      statsFromStaged = true, bloomCols = bloomCols, bloomBits = bloomBits)
+      bloomCols = bloomCols, bloomBits = bloomBits)
 
     val statsMap = stats.toMap
     val computed = promoteStaged(root, partitionCol, staging,
@@ -589,7 +585,7 @@ object Icelite {
     val withPart = withPart0
       .filter(col("__part").isInCollection(current.keySet -- done))
     val (staging, stats) = stageWithStats(spark, withPart, withPart0.schema,
-      root, partitionCol, keyCols, statsFromStaged = true)
+      root, partitionCol, keyCols)
     try {
       val computed = promoteStaged(root, partitionCol, staging,
         stats.map(_._1).filter(current.contains), failAfter,
@@ -629,8 +625,7 @@ object Icelite {
       e => entryPaths(root, snap.partitionCol, e)).get
     val withPart = df.withColumn("__part", col(snap.partitionCol).cast("string"))
     val (staging, stats) = stageWithStats(spark, withPart, withPart.schema,
-      root, snap.partitionCol, df.columns.filterNot(_ == snap.partitionCol),
-      statsFromStaged = true)
+      root, snap.partitionCol, df.columns.filterNot(_ == snap.partitionCol))
     // The staging copy must not outlive this call: a verification abort
     // or a move failure would otherwise leak a full copy of every fat
     // bucket per attempt (vacuum does not reclaim staging dirs).

@@ -93,16 +93,8 @@ object StreamingTiles {
   def streamingLmScore(spark: SparkSession, docs: DataFrame,
                        reference: DataFrame, alpha: Double = 0.4,
                        broadcastMaxCounts: Int = 2000000): DataFrame = {
-    val c = graft.ops.Ops.lmScoreCol(spark, reference, alpha, broadcastMaxCounts)
-    val base = docs.columns.map(col)
-    docs.withColumn("lm", c)
-      .select(base ++ Seq(
-        coalesce(col("lm.n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("lm.n_tri"), lit(0L)).as("n_tri"),
-        coalesce(col("lm.n_bi"), lit(0L)).as("n_bi"),
-        coalesce(col("lm.n_uni"), lit(0L)).as("n_uni"),
-        coalesce(col("lm.n_oov"), lit(0L)).as("n_oov"),
-        coalesce(col("lm.score_fp"), lit(0L)).as("score_fp")): _*)
+    graft.ops.Ops.withLmScores(docs, docs.columns.toSeq.map(col),
+      graft.ops.Ops.lmScoreCol(spark, reference, alpha, broadcastMaxCounts))
   }
 
   /** Streaming curation: the batch gates compose statelessly per row

@@ -447,16 +447,57 @@ object Ops {
     * (line_fp, doc_id) — never line text. The boilerplate set
     * (df >= minDocs) is small: up to `broadcastMaxFps` fps it is collected
     * in one bounded job ([[BoundedCollect.sortedLongs]]) and broadcast to
-    * a per-document kernel, so line text crosses no exchange; past the
-    * cap it feeds an anti join, and line payloads shuffle exactly once
-    * (the per-doc reassembly). Line totals come straight from the source
-    * (no second explode scan). On web corpora, run per domain bucket
-    * (header/footer boilerplate is domain-local): add the domain to the
-    * groupBy key. */
+    * the per-document `drop_boiler_lines` kernel, so line text crosses no
+    * exchange; past the cap it feeds an anti join, and line payloads
+    * shuffle exactly once (the per-doc reassembly). Line totals come
+    * straight from the source (no second explode scan). On web corpora,
+    * scope the key per domain with [[lineDedupByDomain]] (header/footer
+    * boilerplate is domain-local); both run one body, with the
+    * line key unsalted here. */
   def lineDedup(spark: SparkSession, docs: DataFrame,
                 minDocs: Int = 2,
                 broadcastMaxFps: Int = 4 << 20,
-                approxDfRsd: Double = 0.0): DataFrame = {
+                approxDfRsd: Double = 0.0): DataFrame =
+    dropBoilerLines(spark, docs, Seq(col("doc_id")), lit(-1L),
+      minDocs, broadcastMaxFps, approxDfRsd)
+
+  /** The shuffle formulation of [[lineDedup]], exposed for the
+    * fast-path-equivalence spec (and for callers that want to force it). */
+  def lineDedupShuffle(spark: SparkSession, docs: DataFrame,
+                       minDocs: Int = 2): DataFrame =
+    lineDedup(spark, docs, minDocs, broadcastMaxFps = -1)
+
+  /** DOMAIN-scoped boilerplate line removal: header/footer chrome is
+    * domain-local, so the doc-frequency key is (domain, line) rather
+    * than the line alone ("Home | About | Contact" on 10^6 unrelated
+    * sites is navigation, not corpus boilerplate — the global key would
+    * strip it everywhere once ANY minDocs sites share it; the scoped key
+    * only strips it where it actually repeats within one site). Input:
+    * (doc_id, domain, text); output (doc_id, domain, n_lines, n_kept,
+    * clean_text). Null domains group as ''.
+    *
+    * The same body as [[lineDedup]] with the line key salted by
+    * doc_fingerprint(domain): key = (fp(domain) * 48271 + fp(line)) mod P
+    * (wrap-exact, mirrored verbatim in the DuckDB oracle; its mod-P
+    * collision odds equal the global variant's line_fp collisions). The
+    * fast path broadcasts one sorted key array serving EVERY domain at
+    * once (the per-row salt picks the domain slice), so corpus text
+    * still crosses zero exchanges. */
+  def lineDedupByDomain(spark: SparkSession, docs: DataFrame,
+                        minDocs: Int = 2,
+                        broadcastMaxFps: Int = 4 << 20,
+                        approxDfRsd: Double = 0.0): DataFrame =
+    dropBoilerLines(spark, docs.withColumn("domain", coalesce(col("domain"), lit(""))),
+      Seq(col("doc_id"), col("domain")), call_function("doc_fingerprint", col("domain")),
+      minDocs, broadcastMaxFps, approxDfRsd)
+
+  /** The boilerplate-line body of [[lineDedup]] and [[lineDedupByDomain]]:
+    * `keep` are the pass-through columns and `salt` the per-row line-key
+    * salt of the `line_fps` / `drop_boiler_lines` kernels (-1 for the
+    * plain line fingerprint). */
+  private def dropBoilerLines(spark: SparkSession, docs: DataFrame, keep: Seq[Column],
+                              salt: Column, minDocs: Int, broadcastMaxFps: Int,
+                              approxDfRsd: Double): DataFrame = {
     OpsFunctions.register(spark)
     require(minDocs >= 2, s"minDocs=$minDocs (a line always appears in its own doc)")
     // Exact df (the oracle-checked default) aggregates every distinct
@@ -468,14 +509,15 @@ object Ops {
     // at 2M docs. A boilerplate threshold is a coarse knob — a few
     // percent df error moves only lines sitting exactly at it (spec pins
     // equality on corpora whose dfs are well separated from it).
-    // The df scan explodes the line_fps kernel array (one pass, fps
-    // only) — the line STRINGS never leave the scan stage; the fps equal
-    // explode+doc_fingerprint exactly (spec-pinned).
+    // The df scan explodes the line_fps kernel array (one pass, keys
+    // only) — the line STRINGS never leave the scan stage; the keys equal
+    // the per-line doc_fingerprint formulation exactly (spec-pinned).
+    val lineFps = call_function("line_fps", col("text"), salt)
     val dfAgg =
       if (approxDfRsd > 0) approx_count_distinct(col("doc_id"), approxDfRsd)
       else countDistinct(col("doc_id"))
     val boiler = docs
-      .select(col("doc_id"), explode(expr("line_fps(text, -1)")).as("line_fp"))
+      .select(col("doc_id"), explode(lineFps).as("line_fp"))
       .groupBy("line_fp")
       .agg(dfAgg.as("df"))
       .filter(col("df") >= minDocs)
@@ -490,111 +532,35 @@ object Ops {
     // moves only (line_fp, doc_id) pairs). The cap bounds driver/executor
     // memory (default 4M fps = 32 MB); above it the shuffle formulation
     // below remains the big-boiler fallback.
-    val dict = BoundedCollect.sortedLongs(boiler, broadcastMaxFps)
-    if (dict.isDefined) {
-      val bc = spark.sparkContext.broadcast(dict.get)
-      val r = org.apache.spark.sql.GraftBridge.column(DropBoilerLinesExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("text")), bc))
-      docs.select(col("doc_id"), r.as("__r"))
-        .select(col("doc_id"), col("__r.n_lines").as("n_lines"),
-          // NULL-text rows must match the shuffle formulation exactly:
-          // there the left join + coalesce yields (null, 0, ''); the
-          // null-safe kernel struct alone would yield (null, null, null).
-          coalesce(col("__r.n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("__r.clean_text"), lit("")).as("clean_text"))
-    } else {
-      val lines = docs.select(col("doc_id"),
-          posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
-        .withColumn("line_fp", expr("doc_fingerprint(line)"))
-      val kept = lines.join(boiler, Seq("line_fp"), "left_anti")
-      val agg = kept.groupBy("doc_id").agg(
-        count(lit(1)).as("n_kept"),
-        expr("array_join(transform(array_sort(collect_list(struct(pos, line))), " +
-          "s -> s.line), '\\n')").as("clean_text"))
-      val tot = docs.select(col("doc_id"),
-        size(split(col("text"), "\n")).as("n_lines"))
-      tot.join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_lines"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("clean_text"), lit("")).as("clean_text"))
-    }
-  }
-
-  /** The shuffle formulation of [[lineDedup]], exposed for the
-    * fast-path-equivalence spec (and for callers that want to force it). */
-  def lineDedupShuffle(spark: SparkSession, docs: DataFrame,
-                       minDocs: Int = 2): DataFrame =
-    lineDedup(spark, docs, minDocs, broadcastMaxFps = -1)
-
-  /** DOMAIN-scoped boilerplate line removal — the shape [[lineDedup]]'s
-    * scaladoc prescribes for web corpora: header/footer chrome is
-    * domain-local, so the doc-frequency key is (domain, line) rather
-    * than the line alone ("Home | About | Contact" on 10^6 unrelated
-    * sites is navigation, not corpus boilerplate — the global key would
-    * strip it everywhere once ANY minDocs sites share it; the scoped key
-    * only strips it where it actually repeats within one site). Input:
-    * (doc_id, domain, text); output (doc_id, domain, n_lines, n_kept,
-    * clean_text). Null domains group as ''.
-    *
-    * Scale shape identical to [[lineDedup]]: the df aggregation and the
-    * boilerplate set move only (key, doc_id) pairs; the fast path
-    * broadcasts one sorted key array serving EVERY domain at once (the
-    * per-row salt picks the domain slice), so corpus text still crosses
-    * zero exchanges. Key = (fp(domain) * 48271 + fp(line)) mod P —
-    * wrap-exact, mirrored verbatim in the DuckDB oracle; its mod-P
-    * collision odds equal the global variant's line_fp collisions. */
-  def lineDedupByDomain(spark: SparkSession, docs: DataFrame,
-                        minDocs: Int = 2,
-                        broadcastMaxFps: Int = 4 << 20,
-                        approxDfRsd: Double = 0.0): DataFrame = {
-    OpsFunctions.register(spark)
-    require(minDocs >= 2, s"minDocs=$minDocs (a line always appears in its own doc)")
-    val P = 2147483647L
-    val docsN = docs.withColumn("domain", coalesce(col("domain"), lit("")))
-    val dfAgg =
-      if (approxDfRsd > 0) approx_count_distinct(col("doc_id"), approxDfRsd)
-      else countDistinct(col("doc_id"))
-    // Salted line_fps kernel: one pass per document emits the
-    // domain-scoped keys directly (salt = doc_fingerprint(domain) — the
-    // (salt*48271 + fp) mod P arithmetic is inside the kernel and equals
-    // the per-line SQL formulation exactly, spec-pinned); line strings
-    // never leave the scan stage of the df aggregation.
-    val boiler = docsN
-      .select(col("doc_id"),
-        explode(expr("line_fps(text, doc_fingerprint(domain))")).as("line_key"))
-      .groupBy("line_key")
-      .agg(dfAgg.as("df"))
-      .filter(col("df") >= minDocs)
-      .select("line_key")
-
-    val dict = BoundedCollect.sortedLongs(boiler, broadcastMaxFps)
-    if (dict.isDefined) {
-      val bc = spark.sparkContext.broadcast(dict.get)
-      val r = org.apache.spark.sql.GraftBridge.column(DropBoilerLinesSaltedExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("text")),
-        org.apache.spark.sql.GraftBridge.expression(expr("doc_fingerprint(domain)")),
-        bc))
-      docsN.select(col("doc_id"), col("domain"), r.as("__r"))
-        .select(col("doc_id"), col("domain"),
-          col("__r.n_lines").as("n_lines"),
-          coalesce(col("__r.n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("__r.clean_text"), lit("")).as("clean_text"))
-    } else {
-      val lines = docsN.select(col("doc_id"), col("domain"),
-          posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
-        .withColumn("line_key",
-          expr(s"(doc_fingerprint(domain) * 48271 + doc_fingerprint(line)) % $P"))
-      val kept = lines.join(boiler, Seq("line_key"), "left_anti")
-      val agg = kept.groupBy("doc_id").agg(
-        count(lit(1)).as("n_kept"),
-        expr("array_join(transform(array_sort(collect_list(struct(pos, line))), " +
-          "s -> s.line), '\\n')").as("clean_text"))
-      val tot = docsN.select(col("doc_id"), col("domain"),
-        size(split(col("text"), "\n")).as("n_lines"))
-      tot.join(agg, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("domain"), col("n_lines"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-          coalesce(col("clean_text"), lit("")).as("clean_text"))
+    BoundedCollect.sortedLongs(boiler, broadcastMaxFps) match {
+      case Some(dict) =>
+        val bc = spark.sparkContext.broadcast(dict)
+        val r = org.apache.spark.sql.GraftBridge.column(DropBoilerLinesExpr(
+          org.apache.spark.sql.GraftBridge.expression(col("text")),
+          org.apache.spark.sql.GraftBridge.expression(salt), bc))
+        docs.select(keep :+ r.as("__r"): _*)
+          .select(keep ++ Seq(col("__r.n_lines").as("n_lines"),
+            // NULL-text rows must match the shuffle formulation exactly:
+            // there the left join + coalesce yields (null, 0, ''); the
+            // null-safe kernel struct alone would yield (null, null, null).
+            coalesce(col("__r.n_kept"), lit(0L)).as("n_kept"),
+            coalesce(col("__r.clean_text"), lit("")).as("clean_text")): _*)
+      case None =>
+        // Each line with its key from the same kernel as the df scan.
+        val lines = docs.select(col("doc_id"), posexplode(arrays_zip(
+            split(col("text"), "\n").as("line"), lineFps.as("line_fp"))).as(Seq("pos", "l")))
+          .select(col("doc_id"), col("pos"), col("l.line").as("line"),
+            col("l.line_fp").as("line_fp"))
+        val agg = lines.join(boiler, Seq("line_fp"), "left_anti")
+          .groupBy("doc_id").agg(
+            count(lit(1)).as("n_kept"),
+            expr("array_join(transform(array_sort(collect_list(struct(pos, line))), " +
+              "s -> s.line), '\\n')").as("clean_text"))
+        docs.select(keep :+ size(split(col("text"), "\n")).as("n_lines"): _*)
+          .join(agg, Seq("doc_id"), "left")
+          .select(keep ++ Seq(col("n_lines"),
+            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+            coalesce(col("clean_text"), lit("")).as("clean_text")): _*)
     }
   }
 
@@ -1055,10 +1021,12 @@ object Ops {
   private[graft] def evalFpDict(spark: SparkSession, eval: DataFrame,
                                 shingle: Int, cap: Int): Option[Array[Long]] = {
     OpsFunctions.register(spark)
-    BoundedCollect.sortedLongs(eval
-      .select(explode(expr(s"shingle_fps(text, $shingle)")).as("fp"))
-      .distinct(), cap)
+    BoundedCollect.sortedLongs(evalFps(eval, shingle), cap)
   }
+
+  /** The eval set's distinct shingle fps, as a one-column `fp` frame. */
+  private def evalFps(eval: DataFrame, shingle: Int): DataFrame =
+    eval.select(explode(expr(s"shingle_fps(text, $shingle)")).as("fp")).distinct()
 
   /** Per-row distinct-hit-count probe column against a sorted broadcast
     * dictionary. NULL text coalesces to 0 hits, matching the shuffle
@@ -1103,14 +1071,11 @@ object Ops {
         // unbounded in corpus size (every contaminated doc yields a
         // row), so both joins stay shuffles (AQE may still downgrade the
         // dictionary side if it turns out small at runtime).
-        val evalFps = eval
-          .select(explode(expr(s"shingle_fps(text, $shingle)")).as("fp"))
-          .distinct()
         // shingle_fps is already distinct per doc, so count(*) after the
         // set-membership join IS the distinct-contaminated-n-gram count.
         val hits = train
           .select(col("doc_id"), explode(expr(s"shingle_fps(text, $shingle)")).as("fp"))
-          .join(evalFps, "fp")
+          .join(evalFps(eval, shingle), "fp")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_hits"))
         train.select("doc_id")
@@ -1384,11 +1349,23 @@ object Ops {
       throw new IllegalArgumentException(
         s"LM dictionary exceeds $broadcastMaxCounts entries — " +
           "score in batch with lmScore (shuffle path) instead"))
-    val bc = spark.sparkContext.broadcast(dict)
+    lmProbe(spark, dict, nt, alpha)
+  }
+
+  /** The broadcast-dictionary `lm_score_doc` kernel over `text`. */
+  private def lmProbe(spark: SparkSession, dict: LmDict, nt: Long,
+                      alpha: Double): Column =
     org.apache.spark.sql.GraftBridge.column(LmScoreDocExpr(
       org.apache.spark.sql.GraftBridge.expression(col("text")),
-      bc, alpha, nt))
-  }
+      spark.sparkContext.broadcast(dict), alpha, nt))
+
+  /** `keep` plus the six LM score columns of `probe` (an [[lmScoreCol]]
+    * struct), NULL text scoring 0 everywhere as on the shuffle path. */
+  private[graft] def withLmScores(frame: DataFrame, keep: Seq[Column],
+                                  probe: Column): DataFrame =
+    frame.select(keep :+ probe.as("__lm"): _*)
+      .select(keep ++ Seq("n_tokens", "n_tri", "n_bi", "n_uni", "n_oov", "score_fp")
+        .map(f => coalesce(col(s"__lm.$f"), lit(0L)).as(f)): _*)
 
   def lmScore(spark: SparkSession, docs: DataFrame, trainPred: Column,
               alpha: Double = 0.4,
@@ -1404,18 +1381,7 @@ object Ops {
     // with NOTHING broadcast or collected.
     lmDict(spark, train, broadcastMaxCounts) match {
       case Some((dict, ntVal)) =>
-        val bc = spark.sparkContext.broadcast(dict)
-        val scoreCol = org.apache.spark.sql.GraftBridge.column(LmScoreDocExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("text")),
-          bc, alpha, ntVal))
-        return docs.select(col("doc_id"), scoreCol.as("r"))
-          .select(col("doc_id"),
-            coalesce(col("r.n_tokens"), lit(0L)).as("n_tokens"),
-            coalesce(col("r.n_tri"), lit(0L)).as("n_tri"),
-            coalesce(col("r.n_bi"), lit(0L)).as("n_bi"),
-            coalesce(col("r.n_uni"), lit(0L)).as("n_uni"),
-            coalesce(col("r.n_oov"), lit(0L)).as("n_oov"),
-            coalesce(col("r.score_fp"), lit(0L)).as("score_fp"))
+        return withLmScores(docs, Seq(col("doc_id")), lmProbe(spark, dict, ntVal, alpha))
       case None =>
     }
     val counts = lmCounts(train)

@@ -25,47 +25,20 @@ object OpsKernel {
 
   def fingerprint(text: UTF8String): Long = TextKernel.fingerprint(text.toString)
 
-  /** Boilerplate-line removal in ONE per-row pass against a sorted
-    * fingerprint array: lines = split(text, '\n'), a line is dropped iff
-    * its fingerprint is in the set, survivors re-join with '\n'. Output
-    * (n_lines, n_kept, clean_text) matches the shuffle formulation in
-    * [[Ops.lineDedup]] exactly (all-dropped docs yield "" with n_kept 0);
-    * the equivalence is spec-pinned and oracle-checked. */
-  def dropBoilerLines(textU: UTF8String, fps: Array[Long]): InternalRow = {
+  /** Boilerplate-line removal in ONE per-row pass against a sorted key
+    * array: lines = split(text, '\n'), a line is dropped iff its
+    * [[lineKey]] under `salt` is in the set, survivors re-join with '\n'.
+    * Output (n_lines, n_kept, clean_text) matches the shuffle formulation
+    * in [[Ops.lineDedup]] exactly (all-dropped docs yield "" with
+    * n_kept 0); the equivalence is spec-pinned and oracle-checked. */
+  def dropBoilerLines(textU: UTF8String, salt: Long, fps: Array[Long]): InternalRow = {
     val text = textU.toString
     val lines = text.split("\n", -1)
     val sb = new java.lang.StringBuilder(text.length)
     var kept = 0L
     var i = 0
     while (i < lines.length) {
-      val fp = TextKernel.fingerprint(lines(i))
-      if (java.util.Arrays.binarySearch(fps, fp) < 0) {
-        if (kept > 0) sb.append('\n')
-        sb.append(lines(i))
-        kept += 1
-      }
-      i += 1
-    }
-    InternalRow(lines.length, kept, UTF8String.fromString(sb.toString))
-  }
-
-  /** [[dropBoilerLines]] with a per-row SALT (the domain fingerprint):
-    * the membership key is (salt * 48271 + lineFp) mod P, so one global
-    * broadcast array holds domain-scoped boilerplate — header/footer
-    * chrome is domain-local, and a global doc-frequency would conflate
-    * identical lines across unrelated sites. The mixing arithmetic is
-    * wrap-exact mod P (both factors < P < 2^31, product < 2^47) and is
-    * mirrored verbatim by the driver oracle SQL. */
-  def dropBoilerLinesSalted(textU: UTF8String, salt: Long,
-                            fps: Array[Long]): InternalRow = {
-    val text = textU.toString
-    val lines = text.split("\n", -1)
-    val sb = new java.lang.StringBuilder(text.length)
-    var kept = 0L
-    var i = 0
-    while (i < lines.length) {
-      val fp = TextKernel.fingerprint(lines(i))
-      val key = (salt * 48271L + fp) % TextKernel.P
+      val key = lineKey(salt, TextKernel.fingerprint(lines(i)))
       if (java.util.Arrays.binarySearch(fps, key) < 0) {
         if (kept > 0) sb.append('\n')
         sb.append(lines(i))
@@ -75,6 +48,15 @@ object OpsKernel {
     }
     InternalRow(lines.length, kept, UTF8String.fromString(sb.toString))
   }
+
+  /** The boilerplate key of line fingerprint `fp`: a negative `salt`
+    * keeps the plain fingerprint; `salt >= 0` (a domain fingerprint)
+    * gives the domain-scoped key (salt * 48271 + fp) mod P, so one
+    * global array holds every domain's boilerplate. The mixing is
+    * wrap-exact mod P (both factors < P < 2^31, product < 2^47) and is
+    * mirrored verbatim by the driver oracle SQL. */
+  private def lineKey(salt: Long, fp: Long): Long =
+    if (salt >= 0) (salt * 48271L + fp) % TextKernel.P else fp
 
   def jaccard(a: UTF8String, b: UTF8String, k: Int): Double =
     TextKernel.jaccard(a.toString, b.toString, k)
@@ -244,12 +226,11 @@ object OpsKernel {
     new GenericArrayData(out)
   }
 
-  /** Per-line fingerprints of a '\n'-lined document in one pass —
-    * fp = TextKernel.fingerprint(line) per split(text,'\n') segment
-    * (limit -1: trailing empty segments kept, exactly like
-    * explode(split(...))); `salt >= 0` maps each to the domain-scoped
-    * key (salt * 48271 + fp) mod P. Feeds the boilerplate df
-    * aggregation without exploding line STRINGS through a projection. */
+  /** Per-line boilerplate keys of a '\n'-lined document in one pass —
+    * [[lineKey]] of TextKernel.fingerprint(line) per split(text,'\n')
+    * segment (limit -1: trailing empty segments kept, exactly like
+    * explode(split(...))). Feeds the boilerplate df aggregation without
+    * exploding line STRINGS through a projection. */
   def lineFps(textU: UTF8String, salt: Long): ArrayData = {
     val text = textU.toString
     val n = text.length
@@ -262,8 +243,7 @@ object OpsKernel {
     while (i <= n) {
       var j = i
       while (j < n && text.charAt(j) != '\n') j += 1
-      val fp = TextKernel.fingerprint(text.substring(i, j))
-      out(o) = if (salt >= 0) (salt * 48271L + fp) % TextKernel.P else fp
+      out(o) = lineKey(salt, TextKernel.fingerprint(text.substring(i, j)))
       o += 1
       i = j + 1
     }
@@ -1044,36 +1024,14 @@ case class PqAdcExpr(tbl: Expression, qn2: Expression, codes: Expression,
     copy(tbl = f, qn2 = s, codes = t)
 }
 
-/** Per-row boilerplate-line removal against a broadcast sorted fingerprint
-  * set — the zero-shuffle lineDedup fast path: the corpus text never moves,
-  * only the (small) boilerplate set does. */
-case class DropBoilerLinesExpr(text: Expression,
+/** Per-row boilerplate-line removal against a broadcast sorted key set —
+  * the zero-shuffle lineDedup fast path: the corpus text never moves,
+  * only the (small) boilerplate set does. `salt` is the per-row line-key
+  * salt of [[OpsKernel.dropBoilerLines]] (-1 for the global key, the
+  * domain fingerprint for the domain-scoped one), so one broadcast serves
+  * every domain at once. */
+case class DropBoilerLinesExpr(text: Expression, salt: Expression,
                                fps: org.apache.spark.broadcast.Broadcast[Array[Long]])
-    extends UnaryExpression {
-  override def child: Expression = text
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_kept", LongType, nullable = false),
-    StructField("clean_text", StringType, nullable = false)))
-  override def prettyName: String = "drop_boiler_lines"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.dropBoilerLines(t.asInstanceOf[UTF8String], fps.value)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("boilerFps", fps,
-      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    defineCodeGen(ctx, ev, t =>
-      s"graft.ops.OpsKernel.dropBoilerLines($t, (long[]) $ref.value())")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(text = c)
-}
-
-/** Salted (domain-scoped) boilerplate-line removal: drops lines whose
-  * (salt * 48271 + lineFp) mod P key is in the broadcast sorted array.
-  * `salt` is a per-row expression (the domain fingerprint), so one
-  * broadcast serves every domain at once. */
-case class DropBoilerLinesSaltedExpr(text: Expression, salt: Expression,
-                                     fps: org.apache.spark.broadcast.Broadcast[Array[Long]])
     extends BinaryExpression {
   override def left: Expression = text
   override def right: Expression = salt
@@ -1081,15 +1039,14 @@ case class DropBoilerLinesSaltedExpr(text: Expression, salt: Expression,
     StructField("n_lines", IntegerType, nullable = false),
     StructField("n_kept", LongType, nullable = false),
     StructField("clean_text", StringType, nullable = false)))
-  override def prettyName: String = "drop_boiler_lines_salted"
+  override def prettyName: String = "drop_boiler_lines"
   override protected def nullSafeEval(t: Any, s: Any): Any =
-    OpsKernel.dropBoilerLinesSalted(t.asInstanceOf[UTF8String],
-      s.asInstanceOf[Long], fps.value)
+    OpsKernel.dropBoilerLines(t.asInstanceOf[UTF8String], s.asInstanceOf[Long], fps.value)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("boilerFpsSalted", fps,
+    val ref = ctx.addReferenceObj("boilerFps", fps,
       classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
     defineCodeGen(ctx, ev, (t, s) =>
-      s"graft.ops.OpsKernel.dropBoilerLinesSalted($t, $s, (long[]) $ref.value())")
+      s"graft.ops.OpsKernel.dropBoilerLines($t, $s, (long[]) $ref.value())")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(text = l, salt = r)

@@ -95,7 +95,7 @@ class BoundedCollectSpec extends AnyFunSuite {
         "drop_boiler_lines"),
       Probe("lineDedupByDomain", () => dfKeys(withDomain, "doc_fingerprint(domain)", 3),
         cap => Ops.lineDedupByDomain(spark, withDomain, minDocs = 3, broadcastMaxFps = cap),
-        "drop_boiler_lines_salted"),
+        "drop_boiler_lines"),
       Probe("dedupSpans",
         () => docs.select(explode(expr("shingle_fps_pos(text, 4)")).as("fp"))
           .groupBy("fp").count().filter(col("count") >= 2).count(),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.{BoundedCollect, CoverIndex, Pages, SpatialJoin}
 import graft.spark.GeoCache
+import graft.SparkTestBase.jobsDuring
 
 /** The prepared cover index behind both broadcast PIP joins, the cover
   * memo it tiles through, and the polygon-table broadcast budget. */
@@ -45,21 +46,6 @@ class CoverIndexSpec extends AnyFunSuite {
   private def table(s: SparkSession, shapes: Seq[(Long, String)]): DataFrame = {
     import s.implicits._
     shapes.toDF("poly_id", "geojson")
-  }
-
-  private def jobsDuring[T](s: SparkSession)(f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    s.sparkContext.addSparkListener(l)
-    try {
-      val out = f
-      org.apache.spark.sql.GraftBridge.waitListenerBus(s.sparkContext)
-      (out, jobs.get)
-    } finally s.sparkContext.removeSparkListener(l)
   }
 
   test("cover memo tiles 200 geometries once across two passes") {
@@ -168,6 +154,29 @@ class CoverIndexSpec extends AnyFunSuite {
     assert(pairs(shuffled) == viaIndex && viaIndex.nonEmpty)
     assert(CoverIndex.builds.get == b0, "the shuffle call built an index")
     assert(localScans(shuffled.queryExecution.executedPlan) == 0, "cover rows shipped from the driver")
+  }
+
+  test("the salted shuffle path sort-merge joins at the default broadcast threshold") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => Seq(p)
+    }) ++ p.children.flatMap(nodes)
+    assert(spark.sessionState.conf.autoBroadcastJoinThreshold == 10L * 1024 * 1024)
+    val pts = points(spark)
+    val geo = polys(fences(0.0719).take(40))
+    val shuffled = SpatialJoin.pipJoin(spark, pts, geo, res = 9, broadcastCover = false)
+    val rows = shuffled.collect()
+      .map(r => (r.getAs[Long]("poly_id"), r.getAs[Long]("page_id"))).toSet
+    val plan = shuffled.queryExecution.executedPlan
+    assert(plan.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan)
+    val joins = nodes(plan)
+    assert(joins.exists(_.isInstanceOf[SortMergeJoinExec]) &&
+      !joins.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan.toString)
+    assert(rows.nonEmpty && rows == pairs(SpatialJoin.pipJoin(spark, pts, geo, res = 9)))
   }
 
   test("a polygon table past the broadcast budget takes the shuffle path with equal rows") {

@@ -209,23 +209,12 @@ class EngineSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("icelite-jobs").toString
     val df = Pages.indexedPages(spark, sfDir)
       .withColumn("bucket", pmod(col("page_id"), lit(23)))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Icelite.writeResumable(spark, df, root, "bucket")
-      // Deterministic drain of the async listener bus (a sleep was flaky
-      // on loaded machines).
-      org.apache.spark.sql.GraftBridge.waitListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, jobs) = SparkTestBase.jobsDuring(spark)(Icelite.writeResumable(spark, df, root, "bucket"))
     // One staged write + one stats aggregation (+ small constant overhead,
     // incl. possible AQE stage jobs), never O(buckets): the old per-bucket
     // loop would run 46+ jobs here. Observed baseline is 2-4; 8 is ample
     // headroom while still catching any O(buckets) regression.
-    assert(jobs.get <= 8, s"jobs=${jobs.get}")
+    assert(jobs <= 8, s"jobs=$jobs")
     assert(Icelite.completedPartitions(root).size == 23)
     val back = Icelite.read(spark, root).select("page_id").collect()
       .map(_.getLong(0)).sorted
@@ -740,25 +729,14 @@ class PolygonTableJoinSpec extends org.scalatest.funsuite.AnyFunSuite {
       .toDF("poly_id", "geojson").write.mode("overwrite").parquet(dir)
     val polyTable = spark.read.parquet(dir)
     val pts = graft.engine.Pages.indexedPages(spark, "/root/testdata/sf0.001")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val df = try {
-      val d = graft.engine.SpatialJoin
-        .pipJoinPolygonTable(spark, pts, polyTable, res = 9)
-      org.apache.spark.sql.GraftBridge.waitListenerBus(spark.sparkContext)
-      d
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (df, jobs) = SparkTestBase.jobsDuring(spark)(
+      graft.engine.SpatialJoin.pipJoinPolygonTable(spark, pts, polyTable, res = 9))
     // Construction runs exactly ONE Spark job: the single cheap pass that
     // collects (poly_id, geojson, cover_res) together. The ladder, the
     // geometry relation and the covers build all derive from it — no
     // extra scans (tiling runs at broadcast build over an RDD rebuild).
-    assert(jobs.get == 1,
-      s"expected exactly one polygon-table scan job, got ${jobs.get}")
+    assert(jobs == 1,
+      s"expected exactly one polygon-table scan job, got $jobs")
     // Executing the join must not rescan the table either: its file path
     // appears nowhere in the executed plan (covers + geometry are local
     // relations built from the collected pass).

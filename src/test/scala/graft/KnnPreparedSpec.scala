@@ -170,37 +170,16 @@ class KnnPreparedSpec extends AnyFunSuite {
 
   test("a localized prepared batch runs at most 4 Spark jobs per ladder round") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
     val corpus = Knn.prepareCorpus(spark, points, res = 7)
-    sc.addSparkListener(listener)
     try {
       val qs = Seq((1L, 48.8566, 2.3522), (2L, 48.8666, 2.3622),
         (3L, 48.8466, 2.3422)).toDF("qid", "lat", "lng")
-      sc.setJobGroup("knn-batch", "localized prepared batch")
-      val rows = Knn.knnJoinPrepared(spark, corpus, qs, k = 4).collect()
+      val (rows, jobs) = SparkTestBase.jobsDuring(spark)(
+        Knn.knnJoinPrepared(spark, corpus, qs, k = 4).collect())
       val rounds = Knn.lastRounds
-      // Listener events arrive asynchronously but in order: once a later
-      // sentinel job is seen, every batch job has been counted.
-      sc.setJobGroup("knn-sentinel", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("knn-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("knn-sentinel"))
-      val jobs = groups.toArray.count(_ == "knn-batch")
       assert(rows.length == 12 && rounds.nonEmpty && rounds.forall(_.driver), s"$rounds")
       assert(jobs <= 4 * rounds.length, s"$jobs jobs for ${rounds.length} rounds")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      corpus.release()
-    }
+    } finally corpus.release()
   }
 
   test("re-preparing over a caller-provided root resumes instead of rewriting") {

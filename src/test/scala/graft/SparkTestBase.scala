@@ -26,4 +26,21 @@ object SparkTestBase {
     graft.ops.OpsFunctions.register(s)
     s
   }
+
+  /** `f`'s result and the number of Spark jobs started while it ran,
+    * counted once the asynchronous listener bus has drained. */
+  def jobsDuring[T](s: SparkSession)(f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    s.sparkContext.addSparkListener(l)
+    try {
+      val out = f
+      org.apache.spark.sql.GraftBridge.waitListenerBus(s.sparkContext)
+      (out, jobs.get)
+    } finally s.sparkContext.removeSparkListener(l)
+  }
 }
