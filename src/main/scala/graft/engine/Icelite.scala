@@ -340,7 +340,7 @@ object Icelite {
           f.dataType == org.apache.spark.sql.types.StringType,
         s"icelite: bloomCols column '$c' has unsupported type ${f.dataType}")
     }
-    val staging = Paths.get(root, s".staging-${System.nanoTime()}")
+    val staging = Paths.get(root, s"$StagingPrefix${System.nanoTime()}")
     // Optional in-file clustering: sortWithinPartitions on `sortCols`
     // tightens parquet row-group min/max stats on those columns, so
     // later range-predicate scans (the optimizer's H3 prefix->range
@@ -1036,7 +1036,15 @@ object Icelite {
     m
   }
 
-  /** Reclaims `.staging-*` leftovers from CRASHED runs only: a dir is
+  /** Staging dirs sit beside `data/` under the table root. The prefix is
+    * not hidden: Spark ignores a path whose name starts with '.', so the
+    * stats re-read of a `.staging-*` dir warned "All paths were ignored" on
+    * every write. The old prefix is still swept, so leftovers staged by
+    * older code are reclaimed. */
+  private val StagingPrefix = "staging-"
+  private val OldStagingPrefix = ".staging-"
+
+  /** Reclaims staging leftovers from CRASHED runs only: a dir is
     * swept when the newest mtime in its whole subtree is older than one
     * hour, so a LIVE concurrent writer's staging (whose task files are
     * being written continuously, however deep) is never deleted out from
@@ -1046,7 +1054,8 @@ object Icelite {
                                 minAgeMs: Long = 60L * 60 * 1000): Unit = {
     val cutoff = System.currentTimeMillis() - minAgeMs
     listDir(Paths.get(root))(_.filter { p =>
-        p.getFileName.toString.startsWith(".staging-") &&
+        val name = p.getFileName.toString
+        (name.startsWith(StagingPrefix) || name.startsWith(OldStagingPrefix)) &&
           newestMtime(p) < cutoff
       }.toList)
       .foreach(deleteRecursively)

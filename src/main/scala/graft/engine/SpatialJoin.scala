@@ -145,10 +145,14 @@ object SpatialJoin {
     // at every ladder resolution; cell values at different resolutions
     // never collide (the res nibble differs), so one join key column
     // serves the whole ladder.
+    // Both joins are hinted `shuffle_merge`: at Spark's default
+    // auto-broadcast threshold the planner would otherwise broadcast the
+    // covers and the geometries, and this path would shuffle nothing.
     val covers = polygons
       .select(col("poly_id"),
         expr(s"h3_polygon_to_cells_annotated(geojson, $res)"))
       .select("poly_id", "cell", "full")
+      .hint("shuffle_merge")
     val ladder = polygons
       .filter(col("geojson").isNotNull)
       .select(expr(s"h3_cover_res(geojson, $res)").as("r"))
@@ -156,7 +160,7 @@ object SpatialJoin {
     if (ladder.isEmpty)
       return points.limit(0).withColumn("poly_id", lit(0L))
     val probe = CoverIndex.ancestors(points, cellCol, res, ladder)
-    val geo = polygons.select(col("poly_id"), col("geojson"))
+    val geo = polygons.select(col("poly_id"), col("geojson")).hint("shuffle_merge")
     val cand = probe.join(covers, col("__anc") === covers("cell"))
     val fullHits = cand.filter(col("full")).drop("__anc", "cell", "full")
     val boundary = cand.filter(!col("full"))

@@ -515,138 +515,6 @@ object OpsKernel {
   }
 }
 
-case class MinHashExpr(text: Expression, shingle: Expression, numHashes: Expression)
-    extends TernaryExpression {
-  override def first: Expression = text
-  override def second: Expression = shingle
-  override def third: Expression = numHashes
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash"
-  override protected def nullSafeEval(t: Any, k: Any, n: Any): Any =
-    OpsKernel.minHash(t.asInstanceOf[UTF8String], k.asInstanceOf[Int], n.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k, n) => s"graft.ops.OpsKernel.minHash($t, $k, $n)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(text = f, shingle = s, numHashes = t)
-}
-
-case class BandHashesExpr(text: Expression, shingle: Expression,
-                          numHashes: Expression, bands: Expression)
-    extends QuaternaryExpression {
-  override def first: Expression = text
-  override def second: Expression = shingle
-  override def third: Expression = numHashes
-  override def fourth: Expression = bands
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_band_hashes"
-  override protected def nullSafeEval(t: Any, k: Any, n: Any, b: Any): Any =
-    OpsKernel.bandHashes(t.asInstanceOf[UTF8String], k.asInstanceOf[Int],
-      n.asInstanceOf[Int], b.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k, n, b) => s"graft.ops.OpsKernel.bandHashes($t, $k, $n, $b)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(text = f, shingle = s, numHashes = t, bands = q)
-}
-
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
-  override def nullSafeEval(t: Any): Any = OpsKernel.simHash(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.simHash($t)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class FingerprintExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "doc_fingerprint"
-  override def nullSafeEval(t: Any): Any = OpsKernel.fingerprint(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.fingerprint($t)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class JaccardExpr(a: Expression, b: Expression, shingle: Expression)
-    extends TernaryExpression {
-  override def first: Expression = a
-  override def second: Expression = b
-  override def third: Expression = shingle
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ngram_jaccard"
-  override protected def nullSafeEval(x: Any, y: Any, k: Any): Any =
-    OpsKernel.jaccard(x.asInstanceOf[UTF8String], y.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y, k) => s"graft.ops.OpsKernel.jaccard($x, $y, $k)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(a = f, b = s, shingle = t)
-}
-
-/** (n_inter, n_union) of distinct word-shingle fingerprint sets — integer
-  * outputs so the driver's DuckDB oracle can hash-match them exactly. */
-case class OverlapCountsExpr(a: Expression, b: Expression, shingle: Expression)
-    extends TernaryExpression {
-  override def first: Expression = a
-  override def second: Expression = b
-  override def third: Expression = shingle
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_inter", IntegerType, nullable = false),
-    StructField("n_union", IntegerType, nullable = false)))
-  override def prettyName: String = "ngram_overlap"
-  override protected def nullSafeEval(x: Any, y: Any, k: Any): Any =
-    OpsKernel.overlapRow(x.asInstanceOf[UTF8String], y.asInstanceOf[UTF8String],
-      k.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y, k) => s"graft.ops.OpsKernel.overlapRow($x, $y, $k)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(a = f, b = s, shingle = t)
-}
-
-/** One-pass repetition stats of a '\n'-lined document (see
-  * [[OpsKernel.repetitionStats]]). */
-case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("dup_line_frac", DoubleType, nullable = false),
-    StructField("dup_char_frac", DoubleType, nullable = false),
-    StructField("top_word_frac", DoubleType, nullable = false),
-    StructField("top_bigram_frac", DoubleType, nullable = false)))
-  override def prettyName: String = "text_repetition"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.repetitionStats(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.repetitionStats($t)")
-  override protected def withNewChildInternal(nc: Expression): Expression =
-    copy(child = nc)
-}
-
-case class HammingDistExpr(a: Expression, b: Expression) extends BinaryExpression {
-  override def left: Expression = a
-  override def right: Expression = b
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "hamming64"
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    TextKernel.hamming(x.asInstanceOf[Long], y.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"java.lang.Long.bitCount($x ^ $y)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(a = l, b = r)
-}
-
-case class ShingleFpsExpr(text: Expression, shingle: Expression)
-    extends BinaryExpression {
-  override def left: Expression = text
-  override def right: Expression = shingle
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_fps"
-  override protected def nullSafeEval(t: Any, k: Any): Any =
-    OpsKernel.shingleFpsDistinct(t.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.ops.OpsKernel.shingleFpsDistinct($t, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(text = l, shingle = r)
-}
-
 /** Per-row distinct-shingle hit count against a broadcast SORTED eval
   * fingerprint array — the zero-exchange decontamination probe. */
 case class ShingleHitsExpr(text: Expression, shingle: Int,
@@ -665,22 +533,6 @@ case class ShingleHitsExpr(text: Expression, shingle: Int,
   }
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(text = c)
-}
-
-/** Per-line fingerprints (optionally domain-salted) of a '\n'-lined
-  * document — see [[OpsKernel.lineFps]]. salt = -1 for plain line fps. */
-case class LineFpsExpr(text: Expression, salt: Expression)
-    extends BinaryExpression {
-  override def left: Expression = text
-  override def right: Expression = salt
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "line_fps"
-  override protected def nullSafeEval(t: Any, s: Any): Any =
-    OpsKernel.lineFps(t.asInstanceOf[UTF8String], s.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, s) => s"graft.ops.OpsKernel.lineFps($t, $s)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(text = l, salt = r)
 }
 
 /** Per-document maximal duplicated spans against a broadcast SORTED
@@ -709,116 +561,10 @@ case class SpanMergeExpr(text: Expression, window: Int,
     copy(text = c)
 }
 
-/** Positional (ordered, non-distinct) variant of [[ShingleFpsExpr]]. */
-case class ShingleFpsPosExpr(text: Expression, shingle: Expression)
-    extends BinaryExpression {
-  override def left: Expression = text
-  override def right: Expression = shingle
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_fps_pos"
-  override protected def nullSafeEval(t: Any, k: Any): Any =
-    OpsKernel.shingleFpsPos(t.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.ops.OpsKernel.shingleFpsPos($t, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(text = l, shingle = r)
-}
-
-/** Whitespace word count with TextKernel.wordBounds parity (the engine's
-  * shingle/boilerplate word semantics — Character.isWhitespace, not the
-  * regex-\\s of `split`). */
-case class WordCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "word_count"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.wordCount(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.wordCount($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** Packed (kind << 32 | fp) 1/2/3-gram fingerprints in one kernel pass —
-  * the single-scan LM count-table source (see TextKernel.lmGramFps). */
-case class LmGramFpsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lm_gram_fps"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.lmGramFps(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.lmGramFps($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** EXACT `size(split(trim(text), '\\s+'))` parity word count (regex-\\s,
-  * limit -1 — NOT the Character.isWhitespace semantics of word_count):
-  * replaces the regex split + array materialization that several
-  * operators paid per row just to count tokens. */
-case class SplitWordCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "split_word_count"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.splitWordCount(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.splitWordCount($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** One-pass surface-quality counts — struct(n_chars, n_words, n_stop,
-  * n_digit, n_punct) with exact split/regexp_replace/length parity (see
-  * TextKernel.qualityCounts). Replaces the 2 regexp_replace passes + the
-  * interpreted higher-order stopword filter + 3 regex splits that the
-  * qualityScore/lrFilter feature extraction previously paid per row. */
-case class QualityStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_stop", LongType, nullable = false),
-    StructField("n_digit", LongType, nullable = false),
-    StructField("n_punct", LongType, nullable = false)))
-  override def prettyName: String = "text_quality_stats"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.qualityStats(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.qualityStats($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-case class CosineSimExpr(a: Expression, b: Expression) extends BinaryExpression {
-  override def left: Expression = a
-  override def right: Expression = b
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_similarity"
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    OpsKernel.cosineF(x.asInstanceOf[ArrayData], y.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.ops.OpsKernel.cosineF($x, $y)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(a = l, b = r)
-}
-
-case class HyperplaneSigExpr(v: Expression, bits: Expression, seed: Expression)
-    extends TernaryExpression {
-  override def first: Expression = v
-  override def second: Expression = bits
-  override def third: Expression = seed
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_lsh"
-  override protected def nullSafeEval(x: Any, b: Any, s: Any): Any =
-    OpsKernel.hyperplaneSig(x.asInstanceOf[ArrayData], b.asInstanceOf[Int], s.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, b, s) => s"graft.ops.OpsKernel.hyperplaneSig($x, $b, $s)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(v = f, bits = s, seed = t)
-}
-
 /** Broadcast-able centroid index for the IVF assignment: holds the cell
   * centroids (cid ascending) and answers "n nearest centroids by cosine"
   * in one map-side pass — the arithmetic (index-order left-fold dot
-  * products, ties broken by smaller cid) mirrors CosineSimExpr +
+  * products, ties broken by smaller cid) mirrors `cosine_similarity` +
   * `ORDER BY csim DESC, cid` exactly, so replacing the old
   * crossJoin+Window assignment keeps the DuckDB oracle bit-identical. */
 final class CentroidSet(val cids: Array[Long],
@@ -1072,7 +818,6 @@ case class NearestCentroidsExpr(vec: Expression, n: Int,
     copy(vec = c)
 }
 
-/** Character n-gram generator (language-ID profiles). */
 /** Broadcast n-gram count dictionary for the Stupid-Backoff fast path:
   * per kind (1/2/3-gram), a sorted fp array with an aligned count array —
   * 16 bytes per distinct n-gram, probed by binary search. */
@@ -1174,26 +919,7 @@ case class LmProbesGen(text: Expression)
   override def prettyName: String = "lm_probes"
 }
 
-/** Per-document array of (word, cnt) structs — word = non-empty token of
-  * split(trim(text), '\\s+') — pre-aggregated per row, so the global
-  * word-count aggregation (bpeDict) feeds distinct-words-per-doc rows
-  * (via `inline`, which GenerateExec codegens) instead of one row per
-  * word OCCURRENCE, and the per-row regex split + token array never
-  * materializes. The summed counts equal the explode + filter('' ) +
-  * groupBy formulation exactly (spec-pinned). */
-case class WordCountPairsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("word", StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "word_count_pairs"
-  override protected def nullSafeEval(t: Any): Any =
-    OpsKernel.wordCountPairsArr(t.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.ops.OpsKernel.wordCountPairsArr($t)")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
+/** Character n-gram generator (language-ID profiles). */
 case class CharNgramsGen(text: Expression, n: Expression, max: Expression)
     extends Generator with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   override def children: Seq[Expression] = Seq(text, n, max)

@@ -1,59 +1,58 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.types._
+
+import graft.spark.SqlFunctions
 
 /** SQL registration for the pipeline-operator function family. */
 object OpsFunctions {
-  type Builder = Seq[Expression] => Expression
+  import SqlFunctions._
 
-  private def int(e: Expression): Expression =
-    if (e.dataType == IntegerType) e else Cast(e, IntegerType)
-  private def lng(e: Expression): Expression =
-    if (e.dataType == LongType) e else Cast(e, LongType)
-  private def str(e: Expression): Expression =
-    if (e.dataType == StringType) e else Cast(e, StringType)
+  type Builder = SqlFunctions.Builder
 
   val all: Seq[(String, Builder)] = Seq(
-    "minhash" -> (es => MinHashExpr(str(es(0)), int(es(1)), int(es(2)))),
-    "minhash_band_hashes" -> (es => BandHashesExpr(str(es(0)), int(es(1)), int(es(2)), int(es(3)))),
-    "simhash" -> (es => SimHashExpr(str(es(0)))),
-    "doc_fingerprint" -> (es => FingerprintExpr(str(es(0)))),
-    "ngram_jaccard" -> (es => JaccardExpr(str(es(0)), str(es(1)), int(es(2)))),
-    "shingle_fps" -> (es => ShingleFpsExpr(str(es(0)), int(es(1)))),
-    "shingle_fps_pos" -> (es => ShingleFpsPosExpr(str(es(0)), int(es(1)))),
-    "word_count" -> (es => WordCountExpr(str(es(0)))),
-    "ngram_overlap" -> (es => OverlapCountsExpr(str(es(0)), str(es(1)), int(es(2)))),
-    "text_repetition" -> (es => RepetitionStatsExpr(str(es(0)))),
-    "hamming64" -> (es => HammingDistExpr(lng(es(0)), lng(es(1)))),
-    "cosine_similarity" -> (es => CosineSimExpr(es(0), es(1))),
-    "hyperplane_lsh" -> (es => HyperplaneSigExpr(es(0), int(es(1)), lng(es(2)))),
-    "char_ngrams" -> (es => CharNgramsGen(str(es(0)), int(es(1)), int(es(2)))),
-    "lm_probes" -> (es => LmProbesGen(str(es(0)))),
-    "lm_gram_fps" -> (es => LmGramFpsExpr(str(es(0)))),
-    "split_word_count" -> (es => SplitWordCountExpr(str(es(0)))),
-    "word_count_pairs" -> (es => WordCountPairsExpr(str(es(0)))),
-    "text_quality_stats" -> (es => QualityStatsExpr(str(es(0)))),
-    "line_fps" -> (es => LineFpsExpr(str(es(0)), lng(es(1)))))
+    kernel("minhash", "graft.ops.OpsKernel.minHash", arr(LongType))(str, int, int),
+    kernel("minhash_band_hashes", "graft.ops.OpsKernel.bandHashes", arr(LongType))(str, int, int, int),
+    kernel("simhash", "graft.ops.OpsKernel.simHash", LongType)(str),
+    kernel("doc_fingerprint", "graft.ops.OpsKernel.fingerprint", LongType)(str),
+    kernel("ngram_jaccard", "graft.ops.OpsKernel.jaccard", DoubleType)(str, str, int),
+    kernel("shingle_fps", "graft.ops.OpsKernel.shingleFpsDistinct", arr(LongType))(str, int),
+    kernel("shingle_fps_pos", "graft.ops.OpsKernel.shingleFpsPos", arr(LongType))(str, int),
+    // Whitespace word count with TextKernel.wordBounds parity (the engine's
+    // shingle/boilerplate word semantics: Character.isWhitespace, not the
+    // regex-\s of `split`).
+    kernel("word_count", "graft.ops.OpsKernel.wordCount", LongType)(str),
+    // (n_inter, n_union) of distinct word-shingle fingerprint sets: integer
+    // outputs so the DuckDB oracle can hash-match them exactly.
+    kernel("ngram_overlap", "graft.ops.OpsKernel.overlapRow",
+      struct("n_inter" -> IntegerType, "n_union" -> IntegerType))(str, str, int),
+    kernel("text_repetition", "graft.ops.OpsKernel.repetitionStats",
+      struct("n_lines" -> IntegerType, "n_words" -> IntegerType,
+        "dup_line_frac" -> DoubleType, "dup_char_frac" -> DoubleType,
+        "top_word_frac" -> DoubleType, "top_bigram_frac" -> DoubleType))(str),
+    kernel("hamming64", "graft.ops.TextKernel.hamming", IntegerType)(lng, lng),
+    kernel("cosine_similarity", "graft.ops.OpsKernel.cosineF", DoubleType)(asIs, asIs),
+    kernel("hyperplane_lsh", "graft.ops.OpsKernel.hyperplaneSig", LongType)(asIs, int, lng),
+    fn("char_ngrams", str, int, int)(es => CharNgramsGen(es(0), es(1), es(2))),
+    fn("lm_probes", str)(es => LmProbesGen(es(0))),
+    // Packed (kind << 32 | fp) 1/2/3-gram fingerprints in one kernel pass:
+    // the single-scan LM count-table source.
+    kernel("lm_gram_fps", "graft.ops.OpsKernel.lmGramFps", arr(LongType))(str),
+    // Exact `size(split(trim(text), '\\s+'))` (regex-\s, limit -1; NOT the
+    // Character.isWhitespace semantics of word_count), without the regex
+    // split and array per row.
+    kernel("split_word_count", "graft.ops.OpsKernel.splitWordCount", LongType)(str),
+    kernel("word_count_pairs", "graft.ops.OpsKernel.wordCountPairsArr",
+      arr(struct("word" -> StringType, "cnt" -> LongType)))(str),
+    // One-pass surface-quality counts with exact split/regexp_replace/length
+    // parity (see TextKernel.qualityCounts).
+    kernel("text_quality_stats", "graft.ops.OpsKernel.qualityStats",
+      struct("n_chars" -> LongType, "n_words" -> LongType, "n_stop" -> LongType,
+        "n_digit" -> LongType, "n_punct" -> LongType))(str),
+    // Per-line boilerplate keys; salt -1 for plain line fps.
+    kernel("line_fps", "graft.ops.OpsKernel.lineFps", arr(LongType))(str, lng))
 
-  private val RegisteredKey = "graft.ops.functions.registered"
-
-  def register(spark: SparkSession): Unit = {
-    // Idempotence is tracked with a session-conf marker, NOT
-    // functionExists: the registry is pre-seeded with every Spark
-    // built-in, so a future name collision (or a stale builder surviving
-    // in a long-lived session) would silently skip installing OUR kernel
-    // and lose createOrReplace semantics. The marker guarantees exactly
-    // one createOrReplace per session — replace semantics kept, and the
-    // per-call WARN spam (the reason the existence check was added)
-    // still avoided.
-    if (spark.conf.getOption(RegisteredKey).isEmpty) {
-      val registry = spark.sessionState.functionRegistry
-      all.foreach { case (name, builder) =>
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-      spark.conf.set(RegisteredKey, "true")
-    }
-  }
+  def register(spark: SparkSession): Unit =
+    SqlFunctions.register(spark, "graft.ops.functions.registered", all)
 }

@@ -2,39 +2,16 @@ package graft.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.h3.{Edges, H3, Tables}
 
-/** Uniform static kernel facade for the edge/vertex/misc function family;
-  * every method is callable from generated code. Sentinel convention:
-  * 0 = null for Long-typed results, NaN = null for doubles. */
+/** Static kernels of the edge/vertex/misc SQL functions that are more than
+  * one `Edges`/`H3` call; every method is callable from generated code
+  * ([[KernelCall]]). */
 object EdgeKernel {
-  // Long -> Long
-  def edgeOrigin(e: Long): Long = Edges.edgeOrigin(e)
-  def edgeDestination(e: Long): Long = Edges.edgeDestination(e)
-  def edgeReverse(e: Long): Long = Edges.edgeReverse(e)
-  def vertexOwner(v: Long): Long = Edges.vertexOwner(v)
-
-  // (Long, Long) -> Long
-  def cellsToEdge(a: Long, b: Long): Long = Edges.cellsToDirectedEdge(a, b)
-
-  // (Long, Int) -> Long
-  def cellToVertex(c: Long, v: Int): Long = Edges.cellToVertex(c, v)
-
-  // Long -> Boolean
-  def isValidEdge(e: Long): Boolean = Edges.isValidDirectedEdge(e)
-  def isValidVertex(v: Long): Boolean = Edges.isValidVertex(v)
-  def isValidIndex(v: Long): Boolean = Edges.isValidIndex(v)
-
-  // Long -> Double
-  def edgeLengthRads(e: Long): Double = Edges.edgeLengthRads(e)
-  def edgeLengthKm(e: Long): Double = Edges.edgeLengthKm(e)
-  def edgeLengthM(e: Long): Double = Edges.edgeLengthM(e)
-  def cellAreaM2(c: Long): Double = H3.cellAreaM2(c)
-
   // (Long, Int) -> Int (direction digit at res; -1 sentinel)
   def indexDigit(c: Long, res: Int): Int = {
     if (res < 1 || res > H3.getResolution(c)) -1
@@ -53,7 +30,6 @@ object EdgeKernel {
   def hexAreaAvgM2(res: Int): Double = hexAreaAvgKm2(res) * 1e6
   def edgeLengthAvgM(res: Int): Double = edgeLengthAvgKm(res) * 1000.0
   def isResClass3(res: Int): Boolean = (res & 1) == 1
-  def maxGridDiskSize(k: Int): Long = H3.maxGridDiskSize(k)
   def maxGridRingSize(k: Int): Long = if (k <= 0) 1L else 6L * k
   def pentagonCount(res: Int): Long = if (res < 0 || res > 15) 0L else 12L
   def res0CellCount(res: Int): Long = 122L
@@ -62,12 +38,12 @@ object EdgeKernel {
 
   /** Grid path length = grid distance + 1; -1 sentinel on failure. */
   def gridPathSize(a: Long, b: Long): Long = {
-    val d = graft.h3.H3.gridDistance(a, b)
+    val d = H3.gridDistance(a, b)
     if (d < 0L) -1L else d + 1L
   }
 
   /** Total child count of an array of cells at `res` (uncompactCellsSize). */
-  def uncompactSize(arr: org.apache.spark.sql.catalyst.util.ArrayData, res: Int): Long = {
+  def uncompactSize(arr: ArrayData, res: Int): Long = {
     var total = 0L
     var i = 0
     val n = arr.numElements()
@@ -80,10 +56,10 @@ object EdgeKernel {
 
   /** Origin and destination cells of a directed edge (reference
     * src/index/edge.rs:169-180 `cells()`). */
-  def edgeCellsArray(e: Long): org.apache.spark.sql.catalyst.util.ArrayData =
+  def edgeCellsArray(e: Long): ArrayData =
     new GenericArrayData(Array[Any](Edges.edgeOrigin(e), Edges.edgeDestination(e)))
 
-  def icosahedronFacesArr(c: Long): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def icosahedronFacesArr(c: Long): ArrayData = {
     val mask = Edges.icosahedronFaces(c)
     val out = new scala.collection.mutable.ArrayBuilder.ofInt
     var f = 0
@@ -91,24 +67,27 @@ object EdgeKernel {
     new GenericArrayData(out.result().map(_.asInstanceOf[Any]))
   }
 
-  def maxFaceCount(c: Long): Int = Edges.maxFaceCount(c)
-
-  def dissolveJson(arr: org.apache.spark.sql.catalyst.util.ArrayData): org.apache.spark.unsafe.types.UTF8String = {
-    val cells = new Array[Long](arr.numElements())
-    var i = 0
-    while (i < cells.length) { cells(i) = arr.getLong(i); i += 1 }
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.h3.Dissolve.dissolveToGeoJson(cells))
-  }
+  def dissolveJson(cells: ArrayData): UTF8String =
+    UTF8String.fromString(graft.h3.Dissolve.dissolveToGeoJson(cells.toLongArray()))
 
   /** Final stage of the distributed dissolve: link pre-cancelled boundary
     * edges into a MultiPolygon (O(perimeter) input). */
-  def dissolveEdgesJson(arr: org.apache.spark.sql.catalyst.util.ArrayData): org.apache.spark.unsafe.types.UTF8String = {
-    val edges = new Array[Long](arr.numElements())
-    var i = 0
-    while (i < edges.length) { edges(i) = arr.getLong(i); i += 1 }
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.h3.Dissolve.edgesToGeoJson(edges))
+  def dissolveEdgesJson(edges: ArrayData): UTF8String =
+    UTF8String.fromString(graft.h3.Dissolve.edgesToGeoJson(edges.toLongArray()))
+
+  /** Local (i, j) of `cell` around `anchor`, or null when it has none. */
+  def localIj(anchor: Long, cell: Long): InternalRow = {
+    val packed = Edges.cellToLocalIj(anchor, cell)
+    if (packed == Long.MinValue) null else InternalRow((packed >> 32).toInt, packed.toInt)
+  }
+
+  /** Anchored LocalIJ value — the reference's `LocalIJ` shape (anchor +
+    * coord, src/coord/localij.rs:31-36) as one struct, so a column of local
+    * coordinates stays self-describing; null when `cell` has no local IJ. */
+  def localIjAnchored(anchor: Long, cell: Long): InternalRow = {
+    val packed = Edges.cellToLocalIj(anchor, cell)
+    if (packed == Long.MinValue) null
+    else InternalRow(anchor, (packed >> 32).toInt, packed.toInt)
   }
 
   def vertexLatLngRow(v: Long): InternalRow = {
@@ -116,274 +95,13 @@ object EdgeKernel {
     InternalRow(ll(0), ll(1))
   }
 
-  def edgeBoundaryArray(e: Long): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def edgeBoundaryArray(e: Long): ArrayData = {
     val b = Edges.directedEdgeToBoundary(e)
     val rows = new Array[Any](b.length / 2)
     var i = 0
     while (i < rows.length) { rows(i) = InternalRow(b(2 * i), b(2 * i + 1)); i += 1 }
     new GenericArrayData(rows)
   }
-}
-
-/** Generic unary Long-input kernel call (compact registration). */
-case class H3EdgeCall1(fn: String, child: Expression, dataType: DataType,
-                       sentinelNull: Boolean) extends UnaryExpression {
-  override def nullable: Boolean = sentinelNull || child.nullable
-  override def prettyName: String = fn
-
-  override def nullSafeEval(c: Any): Any = {
-    val v = c.asInstanceOf[Long]
-    val r: Any = fn match {
-      case "edgeOrigin" => EdgeKernel.edgeOrigin(v)
-      case "edgeDestination" => EdgeKernel.edgeDestination(v)
-      case "edgeReverse" => EdgeKernel.edgeReverse(v)
-      case "vertexOwner" => EdgeKernel.vertexOwner(v)
-      case "isValidEdge" => EdgeKernel.isValidEdge(v)
-      case "isValidVertex" => EdgeKernel.isValidVertex(v)
-      case "isValidIndex" => EdgeKernel.isValidIndex(v)
-      case "edgeLengthRads" => EdgeKernel.edgeLengthRads(v)
-      case "edgeLengthKm" => EdgeKernel.edgeLengthKm(v)
-      case "edgeLengthM" => EdgeKernel.edgeLengthM(v)
-      case "cellAreaM2" => EdgeKernel.cellAreaM2(v)
-      case "vertexLatLngRow" => EdgeKernel.vertexLatLngRow(v)
-      case "edgeBoundaryArray" => EdgeKernel.edgeBoundaryArray(v)
-      case "edgeCellsArray" => EdgeKernel.edgeCellsArray(v)
-      case "icosahedronFacesArr" => EdgeKernel.icosahedronFacesArr(v)
-      case "maxFaceCount" => EdgeKernel.maxFaceCount(v)
-    }
-    if (sentinelNull && r == 0L) null else r
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      if (sentinelNull)
-        s"""${ev.value} = graft.spark.EdgeKernel.$fn($c);
-            if (${ev.value} == 0L) { ${ev.isNull} = true; }"""
-      else s"${ev.value} = graft.spark.EdgeKernel.$fn($c);")
-
-  override protected def withNewChildInternal(nc: Expression): Expression =
-    copy(child = nc)
-}
-
-/** Generic unary Int-input kernel call (per-resolution tables). */
-case class H3ResCall(fn: String, child: Expression, dataType: DataType)
-    extends UnaryExpression {
-  override def prettyName: String = fn
-  override def nullSafeEval(c: Any): Any = {
-    val v = c.asInstanceOf[Int]
-    fn match {
-      case "numCells" => EdgeKernel.numCells(v)
-      case "hexAreaAvgKm2" => EdgeKernel.hexAreaAvgKm2(v)
-      case "hexAreaAvgM2" => EdgeKernel.hexAreaAvgM2(v)
-      case "edgeLengthAvgKm" => EdgeKernel.edgeLengthAvgKm(v)
-      case "edgeLengthAvgM" => EdgeKernel.edgeLengthAvgM(v)
-      case "isResClass3" => EdgeKernel.isResClass3(v)
-      case "maxGridDiskSize" => EdgeKernel.maxGridDiskSize(v)
-      case "maxGridRingSize" => EdgeKernel.maxGridRingSize(v)
-      case "pentagonCount" => EdgeKernel.pentagonCount(v)
-      case "res0CellCount" => EdgeKernel.res0CellCount(v)
-      case "hexAreaAvgRads2" => EdgeKernel.hexAreaAvgRads2(v)
-    }
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.EdgeKernel.$fn($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression =
-    copy(child = nc)
-}
-
-/** Grid path length (gridPathCellsSize): distance + 1, null on failure. */
-case class GridPathSizeExpr(a: Expression, b: Expression) extends BinaryExpression {
-  override def left: Expression = a
-  override def right: Expression = b
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_grid_path_cells_size"
-  override protected def nullSafeEval(x: Any, y: Any): Any = {
-    val r = EdgeKernel.gridPathSize(x.asInstanceOf[Long], y.asInstanceOf[Long])
-    if (r < 0L) null else r
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => s"""
-      ${ev.value} = graft.spark.EdgeKernel.gridPathSize($x, $y);
-      if (${ev.value} < 0L) { ${ev.isNull} = true; }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(a = l, b = r)
-}
-
-/** Total uncompacted cell count (uncompactCellsSize). */
-case class UncompactSizeExpr(cells: Expression, res: Expression) extends BinaryExpression {
-  override def left: Expression = cells
-  override def right: Expression = res
-  override def dataType: DataType = LongType
-  override def prettyName: String = "h3_uncompact_size"
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    EdgeKernel.uncompactSize(
-      x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], y.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.spark.EdgeKernel.uncompactSize($x, $y)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cells = l, res = r)
-}
-
-case class CellsToEdge(a: Expression, b: Expression) extends BinaryExpression {
-  override def left: Expression = a
-  override def right: Expression = b
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cells_to_directed_edge"
-  override protected def nullSafeEval(x: Any, y: Any): Any = {
-    val r = EdgeKernel.cellsToEdge(x.asInstanceOf[Long], y.asInstanceOf[Long])
-    if (r == 0L) null else r
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => s"""
-      ${ev.value} = graft.spark.EdgeKernel.cellsToEdge($x, $y);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(a = l, b = r)
-}
-
-case class CellToVertexExpr(cell: Expression, v: Expression) extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = v
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell_to_vertex"
-  override protected def nullSafeEval(x: Any, y: Any): Any = {
-    val r = EdgeKernel.cellToVertex(x.asInstanceOf[Long], y.asInstanceOf[Int])
-    if (r == 0L) null else r
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => s"""
-      ${ev.value} = graft.spark.EdgeKernel.cellToVertex($x, $y);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cell = l, v = r)
-}
-
-case class CellToLocalIjExpr(anchor: Expression, cell: Expression)
-    extends BinaryExpression {
-  override def left: Expression = anchor
-  override def right: Expression = cell
-  override def dataType: DataType =
-    StructType(Seq(StructField("i", IntegerType, false), StructField("j", IntegerType, false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell_to_local_ij"
-  override protected def nullSafeEval(o: Any, c: Any): Any = {
-    val packed = Edges.cellToLocalIj(o.asInstanceOf[Long], c.asInstanceOf[Long])
-    if (packed == Long.MinValue) null
-    else InternalRow((packed >> 32).toInt, packed.toInt)
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (o, c) => s"""
-      long packed = graft.h3.Edges.cellToLocalIj($o, $c);
-      if (packed == Long.MIN_VALUE) { ${ev.isNull} = true; }
-      else {
-        ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          new Object[] { (int)(packed >> 32), (int)packed });
-      }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(anchor = l, cell = r)
-}
-
-/** Anchored LocalIJ value — the reference's `LocalIJ` shape (anchor +
-  * coord, /root/reference/src/coord/localij.rs:31-36) as one struct, so a
-  * column of local coordinates stays self-describing (the bare (i,j)
-  * variant requires the caller to carry the anchor out of band). */
-case class CellToLocalIjAnchoredExpr(anchor: Expression, cell: Expression)
-    extends BinaryExpression {
-  override def left: Expression = anchor
-  override def right: Expression = cell
-  override def dataType: DataType =
-    StructType(Seq(StructField("anchor", LongType, false),
-      StructField("i", IntegerType, false), StructField("j", IntegerType, false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell_to_local_ij_anchored"
-  override protected def nullSafeEval(o: Any, c: Any): Any = {
-    val packed = Edges.cellToLocalIj(o.asInstanceOf[Long], c.asInstanceOf[Long])
-    if (packed == Long.MinValue) null
-    else InternalRow(o.asInstanceOf[Long], (packed >> 32).toInt, packed.toInt)
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (o, c) => s"""
-      long packed = graft.h3.Edges.cellToLocalIj($o, $c);
-      if (packed == Long.MIN_VALUE) { ${ev.isNull} = true; }
-      else {
-        ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          new Object[] { $o, (int)(packed >> 32), (int)packed });
-      }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(anchor = l, cell = r)
-}
-
-case class LocalIjToCellExpr(anchor: Expression, i: Expression, j: Expression)
-    extends TernaryExpression {
-  override def first: Expression = anchor
-  override def second: Expression = i
-  override def third: Expression = j
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_local_ij_to_cell"
-  override protected def nullSafeEval(o: Any, x: Any, y: Any): Any = {
-    val r = Edges.localIjToCell(o.asInstanceOf[Long], x.asInstanceOf[Int], y.asInstanceOf[Int])
-    if (r == 0L) null else r
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (o, x, y) => s"""
-      ${ev.value} = graft.h3.Edges.localIjToCell($o, $x, $y);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }""")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(anchor = f, i = s, j = t)
-}
-
-case class IndexDigitExpr(cell: Expression, res: Expression) extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = res
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_get_index_digit"
-  override protected def nullSafeEval(x: Any, y: Any): Any = {
-    val r = EdgeKernel.indexDigit(x.asInstanceOf[Long], y.asInstanceOf[Int])
-    if (r < 0) null else r
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => s"""
-      ${ev.value} = graft.spark.EdgeKernel.indexDigit($x, $y);
-      if (${ev.value} < 0) { ${ev.isNull} = true; }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cell = l, res = r)
-}
-
-/** Dissolve an array of same-resolution cells into a GeoJSON
-  * MultiPolygon outline (h3SetToLinkedGeo / cellsToMultiPolygon). */
-case class CellsToMultiPolygonExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "h3_cells_to_multi_polygon"
-  override def nullSafeEval(c: Any): Any = {
-    val arr = c.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val cells = new Array[Long](arr.numElements())
-    var i = 0
-    while (i < cells.length) { cells(i) = arr.getLong(i); i += 1 }
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      graft.h3.Dissolve.dissolveToGeoJson(cells))
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.EdgeKernel.dissolveJson($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression =
-    copy(child = nc)
-}
-
-/** Link pre-cancelled directed boundary edges into a GeoJSON MultiPolygon
-  * (final, O(perimeter) stage of the distributed dissolve). */
-case class EdgesToMultiPolygonExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "h3_dissolve_edges"
-  override def nullSafeEval(c: Any): Any =
-    EdgeKernel.dissolveEdgesJson(c.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.EdgeKernel.dissolveEdgesJson($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression =
-    copy(child = nc)
 }
 
 /** Per-executor memoized GeoJSON parsing for row-level polygon predicates
@@ -491,44 +209,6 @@ object GeoCache {
     }
     false
   }
-}
-
-/** Exact point-in-polygon predicate over a GeoJSON column (ray cast with
-  * the engine's transmeridian handling; geometry parse memoized per
-  * executor). */
-case class PointInPolygonExpr(lat: Expression, lng: Expression, geojson: Expression)
-    extends TernaryExpression {
-  override def first: Expression = lat
-  override def second: Expression = lng
-  override def third: Expression = geojson
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "h3_point_in_polygon"
-  override protected def nullSafeEval(a: Any, b: Any, g: Any): Any =
-    GeoCache.contains(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      g.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, g) => s"graft.spark.GeoCache.contains($a, $b, $g)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(lat = f, lng = s, geojson = t)
-}
-
-/** Cover resolution the annotated-cover generator ([[PolygonToCellsAnnotatedGen]])
-  * will pick for a geometry at probe res — size-hint only, no tiling.
-  * Lets pipJoinPolygonTable explode probe points by the resolutions
-  * actually present in the table instead of the full cover ladder. */
-case class CoverResExpr(geojson: Expression, res: Expression)
-    extends BinaryExpression {
-  override def left: Expression = geojson
-  override def right: Expression = res
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "h3_cover_res"
-  override protected def nullSafeEval(g: Any, r: Any): Any =
-    GeoCache.coverRes(g.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      r.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (g, r) => s"graft.spark.GeoCache.coverRes($g, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(geojson = l, res = r)
 }
 
 /** Generator: annotated polygon cover — (cell, full) rows where `full`

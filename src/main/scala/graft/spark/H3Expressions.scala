@@ -2,8 +2,6 @@ package graft.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,37 +28,25 @@ object SparkKernel {
   }
 
   def compact(cells: ArrayData): ArrayData = {
-    val n = cells.numElements()
-    val arr = new Array[Long](n)
-    var i = 0
-    while (i < n) { arr(i) = cells.getLong(i); i += 1 }
-    val distinct = arr.distinct
+    val distinct = cells.toLongArray().distinct
     // Reference semantics: heterogeneous input is an error
     // (CompactionError::HeterogeneousResolution); duplicates are treated as
     // set input (deduplicated) since SQL arrays carry no uniqueness.
-    if (distinct.nonEmpty) {
-      val res = H3.getResolution(distinct(0))
-      i = 0
-      while (i < distinct.length) {
-        if (H3.getResolution(distinct(i)) != res)
-          throw new IllegalArgumentException(
-            "h3_compact_cells: heterogeneous resolutions in input")
-        i += 1
-      }
-    }
+    if (distinct.map(H3.getResolution).distinct.length > 1)
+      throw new IllegalArgumentException(
+        "h3_compact_cells: heterogeneous resolutions in input")
     val sorted = distinct.sortBy(H3.orderKey)
     new GenericArrayData(H3.compactSorted(sorted))
   }
 
-  def uncompact(cells: ArrayData, res: Int): ArrayData = {
-    val n = cells.numElements()
-    val arr = new Array[Long](n)
-    var i = 0
-    while (i < n) { arr(i) = cells.getLong(i); i += 1 }
-    new GenericArrayData(H3.uncompact(arr, res))
-  }
+  def uncompact(cells: ArrayData, res: Int): ArrayData =
+    new GenericArrayData(H3.uncompact(cells.toLongArray(), res))
 
   def stringToCell(s: UTF8String): Long = H3.stringToCell(s.toString)
+
+  /** `h3_child_pos_to_cell(pos, cell, res)` in SQL argument order. */
+  def childPosToCell(pos: Long, cell: Long, res: Int): Long =
+    H3.childPosToCell(cell, pos, res)
 
   def cellToString(cell: Long): UTF8String =
     UTF8String.fromString(H3.cellToString(cell))
@@ -85,335 +71,6 @@ object SparkKernel {
       }
     Geo.polygonToCells(polys, res, mode)
   }
-}
-
-case class LatLngToCell(lat: Expression, lng: Expression, res: Expression)
-    extends TernaryExpression {
-  override def first: Expression = lat
-  override def second: Expression = lng
-  override def third: Expression = res
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_latlng_to_cell"
-  override protected def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val r = H3.latLngToCell(a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Int])
-    if (r == 0L) null else r
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) => s"""
-      ${ev.value} = graft.h3.H3.latLngToCell($a, $b, $c);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(lat = f, lng = s, res = t)
-}
-
-case class CellToParent(cell: Expression, res: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = res
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell_to_parent"
-  override protected def nullSafeEval(c: Any, r: Any): Any = {
-    val v = H3.cellToParent(c.asInstanceOf[Long], r.asInstanceOf[Int])
-    if (v == 0L) null else v
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r) => s"""
-      ${ev.value} = graft.h3.H3.cellToParent($c, $r);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cell = l, res = r)
-}
-
-case class CellToCenterChild(cell: Expression, res: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = res
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell_to_center_child"
-  override protected def nullSafeEval(c: Any, r: Any): Any = {
-    val v = H3.cellToCenterChild(c.asInstanceOf[Long], r.asInstanceOf[Int])
-    if (v == 0L) null else v
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r) => s"""
-      ${ev.value} = graft.h3.H3.cellToCenterChild($c, $r);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cell = l, res = r)
-}
-
-case class CellToChildrenSize(cell: Expression, res: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = res
-  override def dataType: DataType = LongType
-  override def prettyName: String = "h3_cell_to_children_size"
-  override protected def nullSafeEval(c: Any, r: Any): Any =
-    H3.cellToChildrenSize(c.asInstanceOf[Long], r.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, r) => s"graft.h3.H3.cellToChildrenSize($c, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cell = l, res = r)
-}
-
-case class CellToChildPos(cell: Expression, res: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cell
-  override def right: Expression = res
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_cell_to_child_pos"
-  override protected def nullSafeEval(c: Any, r: Any): Any = {
-    val v = H3.cellToChildPos(c.asInstanceOf[Long], r.asInstanceOf[Int])
-    if (v < 0L) null else v
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r) => s"""
-      ${ev.value} = graft.h3.H3.cellToChildPos($c, $r);
-      if (${ev.value} < 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cell = l, res = r)
-}
-
-case class ChildPosToCell(pos: Expression, cell: Expression, res: Expression)
-    extends TernaryExpression {
-  override def first: Expression = pos
-  override def second: Expression = cell
-  override def third: Expression = res
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_child_pos_to_cell"
-  override protected def nullSafeEval(p: Any, c: Any, r: Any): Any = {
-    val v = H3.childPosToCell(c.asInstanceOf[Long], p.asInstanceOf[Long], r.asInstanceOf[Int])
-    if (v == 0L) null else v
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, c, r) => s"""
-      ${ev.value} = graft.h3.H3.childPosToCell($c, $p, $r);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(pos = f, cell = s, res = t)
-}
-
-case class CellResolution(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "h3_get_resolution"
-  override def nullSafeEval(c: Any): Any = H3.getResolution(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.getResolution($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellBaseCell(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "h3_get_base_cell"
-  override def nullSafeEval(c: Any): Any = H3.getBaseCell(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.getBaseCell($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class IsValidCell(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "h3_is_valid_cell"
-  override def nullSafeEval(c: Any): Any = H3.isValidCell(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.isValidCell($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class IsPentagon(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "h3_is_pentagon"
-  override def nullSafeEval(c: Any): Any = H3.isPentagon(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.isPentagon($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellToLatLngExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    StructType(Seq(StructField("lat", DoubleType, false), StructField("lng", DoubleType, false)))
-  override def prettyName: String = "h3_cell_to_latlng"
-  override def nullSafeEval(c: Any): Any = SparkKernel.cellToLatLngRow(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SparkKernel.cellToLatLngRow($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellToLat(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "h3_cell_to_lat"
-  override def nullSafeEval(c: Any): Any = H3.cellToLat(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.cellToLat($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellToLng(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "h3_cell_to_lng"
-  override def nullSafeEval(c: Any): Any = H3.cellToLng(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.cellToLng($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellToBoundaryExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("lat", DoubleType, false), StructField("lng", DoubleType, false))),
-    containsNull = false)
-  override def prettyName: String = "h3_cell_to_boundary"
-  override def nullSafeEval(c: Any): Any = SparkKernel.boundaryArray(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SparkKernel.boundaryArray($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellAreaRads2(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "h3_cell_area_rads2"
-  override def nullSafeEval(c: Any): Any = H3.cellAreaRads2(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.cellAreaRads2($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CellAreaKm2(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "h3_cell_area_km2"
-  override def nullSafeEval(c: Any): Any = H3.cellAreaKm2(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.h3.H3.cellAreaKm2($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class GridDistanceExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_grid_distance"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val v = H3.gridDistance(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    if (v < 0L) null else v
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      ${ev.value} = graft.h3.H3.gridDistance($a, $b);
-      if (${ev.value} < 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class AreNeighborCells(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "h3_are_neighbor_cells"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    H3.areNeighborCells(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.h3.H3.areNeighborCells($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class GreatCircleDistanceM(children: Seq[Expression],
-                                fn: String = "greatCircleDistanceM")
-    extends Expression {
-  require(children.length == 4, "h3_distance_m(lat1, lng1, lat2, lng2)")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def prettyName: String = fn match {
-    case "greatCircleDistanceKm" => "h3_great_circle_distance_km"
-    case "greatCircleDistanceRads" => "h3_great_circle_distance_rads"
-    case _ => "h3_great_circle_distance_m"
-  }
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else {
-      val (a, b, c, d) = (vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Double],
-        vs(2).asInstanceOf[Double], vs(3).asInstanceOf[Double])
-      fn match {
-        case "greatCircleDistanceKm" => H3.greatCircleDistanceKm(a, b, c, d)
-        case "greatCircleDistanceRads" => H3.greatCircleDistanceRads(a, b, c, d)
-        case _ => H3.greatCircleDistanceM(a, b, c, d)
-      }
-    }
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evs = children.map(_.genCode(ctx))
-    val anyNull = evs.map(e => s"${e.isNull}").mkString(" || ")
-    ev.copy(code = code"""
-      ${evs.map(_.code).mkString("\n")}
-      boolean ${ev.isNull} = $anyNull;
-      double ${ev.value} = 0.0;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.h3.H3.$fn(
-          ${evs(0).value}, ${evs(1).value}, ${evs(2).value}, ${evs(3).value});
-      }
-    """)
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
-    copy(children = cs)
-}
-
-case class CellToStringExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "h3_to_string"
-  override def nullSafeEval(c: Any): Any = SparkKernel.cellToString(c.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SparkKernel.cellToString($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class StringToCellExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "h3_from_string"
-  override def nullSafeEval(c: Any): Any = {
-    val v = SparkKernel.stringToCell(c.asInstanceOf[UTF8String])
-    if (v == 0L) null else v
-  }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.spark.SparkKernel.stringToCell($c);
-      if (${ev.value} == 0L) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class CompactCellsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "h3_compact_cells"
-  override def nullSafeEval(c: Any): Any = SparkKernel.compact(c.asInstanceOf[ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.spark.SparkKernel.compact($c)")
-  override protected def withNewChildInternal(nc: Expression): Expression = copy(child = nc)
-}
-
-case class UncompactCellsExpr(cells: Expression, res: Expression)
-    extends BinaryExpression {
-  override def left: Expression = cells
-  override def right: Expression = res
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "h3_uncompact_cells"
-  override protected def nullSafeEval(c: Any, r: Any): Any =
-    SparkKernel.uncompact(c.asInstanceOf[ArrayData], r.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, r) => s"graft.spark.SparkKernel.uncompact($c, $r)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(cells = l, res = r)
 }
 
 // ---------------------------------------------------------------------

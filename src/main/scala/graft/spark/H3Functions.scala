@@ -3,7 +3,7 @@ package graft.spark
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
@@ -11,126 +11,107 @@ import org.apache.spark.sql.types._
   * every function is usable from SQL, the Column DSL (via call_function),
   * and benefits from whole-stage codegen. */
 object H3Functions {
+  import SqlFunctions._
+  import NullIf._
 
-  type Builder = Seq[Expression] => Expression
+  type Builder = SqlFunctions.Builder
 
-  // Explicit input coercion (redundant casts are elided by Catalyst).
-  private def lng(e: Expression): Expression =
-    if (e.dataType == LongType) e else Cast(e, LongType)
-  private def int(e: Expression): Expression =
-    if (e.dataType == IntegerType) e else Cast(e, IntegerType)
-  private def dbl(e: Expression): Expression =
-    if (e.dataType == DoubleType) e else Cast(e, DoubleType)
-  private def str(e: Expression): Expression =
-    if (e.dataType == StringType) e else Cast(e, StringType)
-  private def lngArr(e: Expression): Expression = e.dataType match {
-    case ArrayType(LongType, _) => e
-    case _ => Cast(e, ArrayType(LongType))
-  }
+  private val LatLng = struct("lat" -> DoubleType, "lng" -> DoubleType)
 
   val all: Seq[(String, Builder)] = Seq(
-    "h3_latlng_to_cell" -> (es => LatLngToCell(dbl(es(0)), dbl(es(1)), int(es(2)))),
-    "h3_cell_to_parent" -> (es => CellToParent(lng(es(0)), int(es(1)))),
-    "h3_cell_to_center_child" -> (es => CellToCenterChild(lng(es(0)), int(es(1)))),
-    "h3_cell_to_children_size" -> (es => CellToChildrenSize(lng(es(0)), int(es(1)))),
-    "h3_cell_to_child_pos" -> (es => CellToChildPos(lng(es(0)), int(es(1)))),
-    "h3_child_pos_to_cell" -> (es => ChildPosToCell(lng(es(0)), lng(es(1)), int(es(2)))),
-    "h3_get_resolution" -> (es => CellResolution(lng(es(0)))),
-    "h3_get_base_cell" -> (es => CellBaseCell(lng(es(0)))),
-    "h3_is_valid_cell" -> (es => IsValidCell(lng(es(0)))),
-    "h3_is_pentagon" -> (es => IsPentagon(lng(es(0)))),
-    "h3_cell_to_latlng" -> (es => CellToLatLngExpr(lng(es(0)))),
-    "h3_cell_to_lat" -> (es => CellToLat(lng(es(0)))),
-    "h3_cell_to_lng" -> (es => CellToLng(lng(es(0)))),
-    "h3_cell_to_boundary" -> (es => CellToBoundaryExpr(lng(es(0)))),
-    "h3_cell_area_rads2" -> (es => CellAreaRads2(lng(es(0)))),
-    "h3_cell_area_km2" -> (es => CellAreaKm2(lng(es(0)))),
-    "h3_grid_distance" -> (es => GridDistanceExpr(lng(es(0)), lng(es(1)))),
-    "h3_are_neighbor_cells" -> (es => AreNeighborCells(lng(es(0)), lng(es(1)))),
-    "h3_great_circle_distance_m" -> (es => GreatCircleDistanceM(es.map(dbl))),
-    "h3_great_circle_distance_km" -> (es => GreatCircleDistanceM(es.map(dbl), "greatCircleDistanceKm")),
-    "h3_great_circle_distance_rads" -> (es => GreatCircleDistanceM(es.map(dbl), "greatCircleDistanceRads")),
-    "h3_get_hexagon_area_avg_rads2" -> (es => H3ResCall("hexAreaAvgRads2", int(es(0)), DoubleType)),
-    "h3_res0_cell_count" -> (es => H3ResCall("res0CellCount", int(es(0)), LongType)),
-    "h3_to_string" -> (es => CellToStringExpr(lng(es(0)))),
-    "h3_from_string" -> (es => StringToCellExpr(str(es(0)))),
-    "h3_compact_cells" -> (es => CompactCellsExpr(lngArr(es(0)))),
-    "h3_uncompact_cells" -> (es => UncompactCellsExpr(lngArr(es(0)), int(es(1)))),
-    "h3_grid_disk" -> (es => GridDiskGen(lng(es(0)), int(es(1)))),
-    "h3_grid_disk_distances" -> (es => GridDiskDistancesGen(lng(es(0)), int(es(1)))),
-    "h3_grid_ring" -> (es => GridRingGen(lng(es(0)), int(es(1)))),
-    "h3_cell_to_children" -> (es => CellToChildrenGen(lng(es(0)), int(es(1)))),
-    "h3_grid_path_cells" -> (es => GridPathCellsGen(lng(es(0)), lng(es(1)))),
-    "h3_polygon_to_cells" -> (es => PolygonToCellsGen(str(es(0)), int(es(1)), int(es(2)))),
-    "h3_polygon_to_cells_annotated" -> (es => PolygonToCellsAnnotatedGen(str(es(0)), int(es(1)))),
-    "h3_cover_res" -> (es => CoverResExpr(str(es(0)), int(es(1)))),
-    "h3_point_in_polygon" -> (es => PointInPolygonExpr(dbl(es(0)), dbl(es(1)), str(es(2)))),
+    kernel("h3_latlng_to_cell", "graft.h3.H3.latLngToCell", LongType, Zero)(dbl, dbl, int),
+    kernel("h3_cell_to_parent", "graft.h3.H3.cellToParent", LongType, Zero)(lng, int),
+    kernel("h3_cell_to_center_child", "graft.h3.H3.cellToCenterChild", LongType, Zero)(lng, int),
+    kernel("h3_cell_to_children_size", "graft.h3.H3.cellToChildrenSize", LongType)(lng, int),
+    kernel("h3_cell_to_child_pos", "graft.h3.H3.cellToChildPos", LongType, Negative)(lng, int),
+    kernel("h3_child_pos_to_cell", "graft.spark.SparkKernel.childPosToCell", LongType, Zero)(lng, lng, int),
+    kernel("h3_get_resolution", "graft.h3.H3.getResolution", IntegerType)(lng),
+    kernel("h3_get_base_cell", "graft.h3.H3.getBaseCell", IntegerType)(lng),
+    kernel("h3_is_valid_cell", "graft.h3.H3.isValidCell", BooleanType)(lng),
+    kernel("h3_is_pentagon", "graft.h3.H3.isPentagon", BooleanType)(lng),
+    kernel("h3_cell_to_latlng", "graft.spark.SparkKernel.cellToLatLngRow", LatLng)(lng),
+    kernel("h3_cell_to_lat", "graft.h3.H3.cellToLat", DoubleType)(lng),
+    kernel("h3_cell_to_lng", "graft.h3.H3.cellToLng", DoubleType)(lng),
+    kernel("h3_cell_to_boundary", "graft.spark.SparkKernel.boundaryArray", arr(LatLng))(lng),
+    kernel("h3_cell_area_rads2", "graft.h3.H3.cellAreaRads2", DoubleType)(lng),
+    kernel("h3_cell_area_km2", "graft.h3.H3.cellAreaKm2", DoubleType)(lng),
+    kernel("h3_grid_distance", "graft.h3.H3.gridDistance", LongType, Negative)(lng, lng),
+    kernel("h3_are_neighbor_cells", "graft.h3.H3.areNeighborCells", BooleanType)(lng, lng),
+    kernel("h3_great_circle_distance_m", "graft.h3.H3.greatCircleDistanceM", DoubleType)(dbl, dbl, dbl, dbl),
+    kernel("h3_great_circle_distance_km", "graft.h3.H3.greatCircleDistanceKm", DoubleType)(dbl, dbl, dbl, dbl),
+    kernel("h3_great_circle_distance_rads", "graft.h3.H3.greatCircleDistanceRads", DoubleType)(dbl, dbl, dbl, dbl),
+    kernel("h3_get_hexagon_area_avg_rads2", "graft.spark.EdgeKernel.hexAreaAvgRads2", DoubleType)(int),
+    kernel("h3_res0_cell_count", "graft.spark.EdgeKernel.res0CellCount", LongType)(int),
+    kernel("h3_to_string", "graft.spark.SparkKernel.cellToString", StringType)(lng),
+    kernel("h3_from_string", "graft.spark.SparkKernel.stringToCell", LongType, Zero)(str),
+    kernel("h3_compact_cells", "graft.spark.SparkKernel.compact", arr(LongType))(lngArr),
+    kernel("h3_uncompact_cells", "graft.spark.SparkKernel.uncompact", arr(LongType))(lngArr, int),
+    fn("h3_grid_disk", lng, int)(es => GridDiskGen(es(0), es(1))),
+    fn("h3_grid_disk_distances", lng, int)(es => GridDiskDistancesGen(es(0), es(1))),
+    fn("h3_grid_ring", lng, int)(es => GridRingGen(es(0), es(1))),
+    fn("h3_cell_to_children", lng, int)(es => CellToChildrenGen(es(0), es(1))),
+    fn("h3_grid_path_cells", lng, lng)(es => GridPathCellsGen(es(0), es(1))),
+    fn("h3_polygon_to_cells", str, int, int)(es => PolygonToCellsGen(es(0), es(1), es(2))),
+    fn("h3_polygon_to_cells_annotated", str, int)(es => PolygonToCellsAnnotatedGen(es(0), es(1))),
+    // Cover resolution the annotated cover picks for a geometry at probe
+    // res: a size hint, no tiling.
+    kernel("h3_cover_res", "graft.spark.GeoCache.coverRes", IntegerType)(str, int),
+    // Exact ray-cast point-in-polygon over a GeoJSON column (geometry
+    // parse memoized per executor).
+    kernel("h3_point_in_polygon", "graft.spark.GeoCache.contains", BooleanType)(dbl, dbl, str),
     // Directed edges.
-    "h3_cells_to_directed_edge" -> (es => CellsToEdge(lng(es(0)), lng(es(1)))),
-    "h3_origin_to_directed_edges" -> (es => OriginToEdgesGen(lng(es(0)))),
-    "h3_cell_boundary_edges" -> (es => CellBoundaryEdgesGen(lng(es(0)), int(es(1)))),
-    "h3_get_directed_edge_origin" -> (es => H3EdgeCall1("edgeOrigin", lng(es(0)), LongType, sentinelNull = true)),
-    "h3_get_directed_edge_destination" -> (es => H3EdgeCall1("edgeDestination", lng(es(0)), LongType, sentinelNull = true)),
-    "h3_directed_edge_reverse" -> (es => H3EdgeCall1("edgeReverse", lng(es(0)), LongType, sentinelNull = true)),
-    "h3_is_valid_directed_edge" -> (es => H3EdgeCall1("isValidEdge", lng(es(0)), BooleanType, sentinelNull = false)),
-    "h3_directed_edge_to_boundary" -> (es => H3EdgeCall1("edgeBoundaryArray", lng(es(0)),
-      ArrayType(StructType(Seq(StructField("lat", DoubleType, false), StructField("lng", DoubleType, false))), containsNull = false),
-      sentinelNull = false)),
-    "h3_directed_edge_to_cells" -> (es => H3EdgeCall1("edgeCellsArray", lng(es(0)),
-      ArrayType(LongType, containsNull = false), sentinelNull = false)),
-    "h3_edge_length_rads" -> (es => H3EdgeCall1("edgeLengthRads", lng(es(0)), DoubleType, sentinelNull = false)),
-    "h3_edge_length_km" -> (es => H3EdgeCall1("edgeLengthKm", lng(es(0)), DoubleType, sentinelNull = false)),
-    "h3_edge_length_m" -> (es => H3EdgeCall1("edgeLengthM", lng(es(0)), DoubleType, sentinelNull = false)),
+    kernel("h3_cells_to_directed_edge", "graft.h3.Edges.cellsToDirectedEdge", LongType, Zero)(lng, lng),
+    fn("h3_origin_to_directed_edges", lng)(es => OriginToEdgesGen(es(0))),
+    fn("h3_cell_boundary_edges", lng, int)(es => CellBoundaryEdgesGen(es(0), es(1))),
+    kernel("h3_get_directed_edge_origin", "graft.h3.Edges.edgeOrigin", LongType, Zero)(lng),
+    kernel("h3_get_directed_edge_destination", "graft.h3.Edges.edgeDestination", LongType, Zero)(lng),
+    kernel("h3_directed_edge_reverse", "graft.h3.Edges.edgeReverse", LongType, Zero)(lng),
+    kernel("h3_is_valid_directed_edge", "graft.h3.Edges.isValidDirectedEdge", BooleanType)(lng),
+    kernel("h3_directed_edge_to_boundary", "graft.spark.EdgeKernel.edgeBoundaryArray", arr(LatLng))(lng),
+    kernel("h3_directed_edge_to_cells", "graft.spark.EdgeKernel.edgeCellsArray", arr(LongType))(lng),
+    kernel("h3_edge_length_rads", "graft.h3.Edges.edgeLengthRads", DoubleType)(lng),
+    kernel("h3_edge_length_km", "graft.h3.Edges.edgeLengthKm", DoubleType)(lng),
+    kernel("h3_edge_length_m", "graft.h3.Edges.edgeLengthM", DoubleType)(lng),
     // Vertexes.
-    "h3_cell_to_vertex" -> (es => CellToVertexExpr(lng(es(0)), int(es(1)))),
-    "h3_cell_to_vertexes" -> (es => CellToVertexesGen(lng(es(0)))),
-    "h3_vertex_to_latlng" -> (es => H3EdgeCall1("vertexLatLngRow", lng(es(0)),
-      StructType(Seq(StructField("lat", DoubleType, false), StructField("lng", DoubleType, false))), sentinelNull = false)),
-    "h3_get_vertex_owner" -> (es => H3EdgeCall1("vertexOwner", lng(es(0)), LongType, sentinelNull = true)),
-    "h3_is_valid_vertex" -> (es => H3EdgeCall1("isValidVertex", lng(es(0)), BooleanType, sentinelNull = false)),
-    "h3_is_valid_index" -> (es => H3EdgeCall1("isValidIndex", lng(es(0)), BooleanType, sentinelNull = false)),
+    kernel("h3_cell_to_vertex", "graft.h3.Edges.cellToVertex", LongType, Zero)(lng, int),
+    fn("h3_cell_to_vertexes", lng)(es => CellToVertexesGen(es(0))),
+    kernel("h3_vertex_to_latlng", "graft.spark.EdgeKernel.vertexLatLngRow", LatLng)(lng),
+    kernel("h3_get_vertex_owner", "graft.h3.Edges.vertexOwner", LongType, Zero)(lng),
+    kernel("h3_is_valid_vertex", "graft.h3.Edges.isValidVertex", BooleanType)(lng),
+    kernel("h3_is_valid_index", "graft.h3.Edges.isValidIndex", BooleanType)(lng),
     // Misc / inspection / tables.
-    "h3_cell_area_m2" -> (es => H3EdgeCall1("cellAreaM2", lng(es(0)), DoubleType, sentinelNull = false)),
-    "h3_get_index_digit" -> (es => IndexDigitExpr(lng(es(0)), int(es(1)))),
-    "h3_get_num_cells" -> (es => H3ResCall("numCells", int(es(0)), LongType)),
-    "h3_get_hexagon_area_avg_km2" -> (es => H3ResCall("hexAreaAvgKm2", int(es(0)), DoubleType)),
-    "h3_get_hexagon_edge_length_avg_km" -> (es => H3ResCall("edgeLengthAvgKm", int(es(0)), DoubleType)),
-    "h3_is_res_class_iii" -> (es => H3ResCall("isResClass3", int(es(0)), BooleanType)),
-    "h3_max_grid_disk_size" -> (es => H3ResCall("maxGridDiskSize", int(es(0)), LongType)),
-    "h3_max_grid_ring_size" -> (es => H3ResCall("maxGridRingSize", int(es(0)), LongType)),
-    "h3_pentagon_count" -> (es => H3ResCall("pentagonCount", int(es(0)), LongType)),
-    "h3_grid_path_cells_size" -> (es => GridPathSizeExpr(lng(es(0)), lng(es(1)))),
-    "h3_uncompact_size" -> (es => UncompactSizeExpr(lngArr(es(0)), int(es(1)))),
-    "h3_get_res0_cells" -> (_ => Res0CellsGen()),
-    "h3_get_pentagons" -> (es => PentagonsGen(int(es(0)))),
-    "h3_cell_to_local_ij" -> (es => CellToLocalIjExpr(lng(es(0)), lng(es(1)))),
-    "h3_cell_to_local_ij_anchored" -> (es => CellToLocalIjAnchoredExpr(lng(es(0)), lng(es(1)))),
-    "h3_local_ij_to_cell" -> (es => LocalIjToCellExpr(lng(es(0)), int(es(1)), int(es(2)))),
-    "h3_get_icosahedron_faces" -> (es => H3EdgeCall1("icosahedronFacesArr", lng(es(0)),
-      ArrayType(IntegerType, containsNull = false), sentinelNull = false)),
-    "h3_max_face_count" -> (es => H3EdgeCall1("maxFaceCount", lng(es(0)), IntegerType, sentinelNull = false)),
-    "h3_cells_to_multi_polygon" -> (es => CellsToMultiPolygonExpr(lngArr(es(0)))),
-    "h3_dissolve_edges" -> (es => EdgesToMultiPolygonExpr(lngArr(es(0)))),
-    "h3_line_to_cells" -> (es => LineToCellsGen(str(es(0)), int(es(1)))),
-    "h3_get_hexagon_area_avg_m2" -> (es => H3ResCall("hexAreaAvgM2", int(es(0)), DoubleType)),
-    "h3_get_hexagon_edge_length_avg_m" -> (es => H3ResCall("edgeLengthAvgM", int(es(0)), DoubleType)))
-
-  private val RegisteredKey = "graft.h3.functions.registered"
+    kernel("h3_cell_area_m2", "graft.h3.H3.cellAreaM2", DoubleType)(lng),
+    kernel("h3_get_index_digit", "graft.spark.EdgeKernel.indexDigit", IntegerType, Negative)(lng, int),
+    kernel("h3_get_num_cells", "graft.spark.EdgeKernel.numCells", LongType)(int),
+    kernel("h3_get_hexagon_area_avg_km2", "graft.spark.EdgeKernel.hexAreaAvgKm2", DoubleType)(int),
+    kernel("h3_get_hexagon_edge_length_avg_km", "graft.spark.EdgeKernel.edgeLengthAvgKm", DoubleType)(int),
+    kernel("h3_is_res_class_iii", "graft.spark.EdgeKernel.isResClass3", BooleanType)(int),
+    kernel("h3_max_grid_disk_size", "graft.h3.H3.maxGridDiskSize", LongType)(int),
+    kernel("h3_max_grid_ring_size", "graft.spark.EdgeKernel.maxGridRingSize", LongType)(int),
+    kernel("h3_pentagon_count", "graft.spark.EdgeKernel.pentagonCount", LongType)(int),
+    kernel("h3_grid_path_cells_size", "graft.spark.EdgeKernel.gridPathSize", LongType, Negative)(lng, lng),
+    kernel("h3_uncompact_size", "graft.spark.EdgeKernel.uncompactSize", LongType)(lngArr, int),
+    fn("h3_get_res0_cells")(_ => Res0CellsGen()),
+    fn("h3_get_pentagons", int)(es => PentagonsGen(es(0))),
+    kernel("h3_cell_to_local_ij", "graft.spark.EdgeKernel.localIj",
+      struct("i" -> IntegerType, "j" -> IntegerType), NullRef)(lng, lng),
+    kernel("h3_cell_to_local_ij_anchored", "graft.spark.EdgeKernel.localIjAnchored",
+      struct("anchor" -> LongType, "i" -> IntegerType, "j" -> IntegerType), NullRef)(lng, lng),
+    kernel("h3_local_ij_to_cell", "graft.h3.Edges.localIjToCell", LongType, Zero)(lng, int, int),
+    kernel("h3_get_icosahedron_faces", "graft.spark.EdgeKernel.icosahedronFacesArr", arr(IntegerType))(lng),
+    kernel("h3_max_face_count", "graft.h3.Edges.maxFaceCount", IntegerType)(lng),
+    // Dissolve a same-resolution cell array into a GeoJSON MultiPolygon
+    // outline; link pre-cancelled boundary edges into one (the final,
+    // O(perimeter) stage of the distributed dissolve).
+    kernel("h3_cells_to_multi_polygon", "graft.spark.EdgeKernel.dissolveJson", StringType)(lngArr),
+    kernel("h3_dissolve_edges", "graft.spark.EdgeKernel.dissolveEdgesJson", StringType)(lngArr),
+    fn("h3_line_to_cells", str, int)(es => LineToCellsGen(es(0), es(1))),
+    kernel("h3_get_hexagon_area_avg_m2", "graft.spark.EdgeKernel.hexAreaAvgM2", DoubleType)(int),
+    kernel("h3_get_hexagon_edge_length_avg_m", "graft.spark.EdgeKernel.edgeLengthAvgM", DoubleType)(int))
 
   /** Session-scoped registration (idempotent). */
   def register(spark: SparkSession): Unit = {
-    // Session-conf marker instead of functionExists: the registry is
-    // pre-seeded with all Spark built-ins, so an existence check would
-    // silently skip installing our kernel on a name collision (losing
-    // createOrReplace semantics). One createOrReplace per session keeps
-    // replace semantics without the per-call WARN spam.
-    if (spark.conf.getOption(RegisteredKey).isEmpty) {
-      val registry = spark.sessionState.functionRegistry
-      all.foreach { case (name, builder) =>
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-      spark.conf.set(RegisteredKey, "true")
-    }
+    SqlFunctions.register(spark, "graft.h3.functions.registered", all)
     // Idempotent optimizer-rule injection (experimental methods allow
     // post-session registration; dedup by reference).
     val extra = spark.experimental.extraOptimizations

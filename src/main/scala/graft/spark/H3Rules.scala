@@ -7,6 +7,20 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.h3.H3
 
+/** Builds and matches one registered H3 kernel call by its SQL name, so the
+  * rule's patterns read like the functions they rewrite. */
+private[spark] sealed class H3Call(name: String) {
+  private lazy val build = H3Functions.all.find(_._1 == name).get._2
+  def apply(args: Expression*): Expression = build(args)
+  def unapplySeq(e: Expression): Option[Seq[Expression]] = e match {
+    case k: KernelCall if k.name == name => Some(k.children)
+    case _ => None
+  }
+}
+private[spark] object CellToParent extends H3Call("h3_cell_to_parent")
+private[spark] object CellResolution extends H3Call("h3_get_resolution")
+private[spark] object LatLngToCell extends H3Call("h3_latlng_to_cell")
+
 /** H3-aware algebraic rewrites.
   *
   * - parent-of-parent collapse: `h3_cell_to_parent(h3_cell_to_parent(c, r1), r2)`

@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{BoundedCollect, CoverIndex, Pages, SpatialJoin}
@@ -138,8 +141,7 @@ class CoverIndexSpec extends AnyFunSuite {
   }
 
   test("the shuffle path joins against the index a broadcast call prepared") {
-    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.LocalTableScanExec
     def localScans(p: SparkPlan): Int = (p match {
       case a: AdaptiveSparkPlanExec => localScans(a.executedPlan)
       case q: QueryStageExec => localScans(q.plan)
@@ -156,15 +158,14 @@ class CoverIndexSpec extends AnyFunSuite {
     assert(localScans(shuffled.queryExecution.executedPlan) == 0, "cover rows shipped from the driver")
   }
 
+  /** Every node of an executed plan, through adaptive stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => Seq(p)
+  }) ++ p.children.flatMap(nodes)
+
   test("the salted shuffle path sort-merge joins at the default broadcast threshold") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _ => Seq(p)
-    }) ++ p.children.flatMap(nodes)
     assert(spark.sessionState.conf.autoBroadcastJoinThreshold == 10L * 1024 * 1024)
     val pts = points(spark)
     val geo = polys(fences(0.0719).take(40))
@@ -177,6 +178,22 @@ class CoverIndexSpec extends AnyFunSuite {
     assert(joins.exists(_.isInstanceOf[SortMergeJoinExec]) &&
       !joins.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan.toString)
     assert(rows.nonEmpty && rows == pairs(SpatialJoin.pipJoin(spark, pts, geo, res = 9)))
+  }
+
+  test("the table shuffle path sort-merge joins both joins at the default broadcast threshold") {
+    assert(spark.sessionState.conf.autoBroadcastJoinThreshold == 10L * 1024 * 1024)
+    val pts = points(spark)
+    val t = table(spark, fences(0.0833).take(40))
+    val shuffled = SpatialJoin.pipJoinPolygonTable(spark, pts, t, res = 9, broadcastPolygons = false)
+    val rows = shuffled.collect()
+      .map(r => (r.getAs[Long]("poly_id"), r.getAs[Long]("page_id"))).toSet
+    val plan = shuffled.queryExecution.executedPlan
+    assert(plan.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan)
+    val joins = nodes(plan)
+    // The cover join, then the geometry join-back of the boundary rows.
+    assert(joins.count(_.isInstanceOf[SortMergeJoinExec]) >= 2 &&
+      !joins.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan.toString)
+    assert(rows.nonEmpty && rows == pairs(SpatialJoin.pipJoinPolygonTable(spark, pts, t, res = 9)))
   }
 
   test("a polygon table past the broadcast budget takes the shuffle path with equal rows") {
